@@ -1987,7 +1987,7 @@ def scale_ramp(factor: int = 10) -> None:
             nd_corpus, nd_base_idx, "doc_id", "text"
         )
         nd_ramp_idx = os.path.join(ramp_dir, "__nd_idx_ramp")
-        for part in ("sigs", "bands"):
+        for part in ("sigs",):
             src = spark.read.parquet(f"{nd_base_idx}/{part}")
             copies = [src] + [
                 src.withColumn("doc_id", F.col("doc_id") + i * RAMP_OFFSET)

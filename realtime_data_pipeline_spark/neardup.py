@@ -10,11 +10,20 @@ short key that AQE can re-plan. The exact verify step re-checks candidates
 with true Jaccard, so false positives from banding cost only compute, not
 correctness.
 
-Shingling, hashing, and MinHash permutations are pure JVM column
-expressions (xxhash64 + universal hashing `(a·h + b) mod p` over 32-bit
-folded hashes — products stay < 2^63, no overflow). SimHash bit-folding is
-the one numpy step (Arrow-batched pandas UDF), because per-bit expression
-trees would interpret 64 × n_shingles element hops per row.
+Shingling and hashing are pure JVM column expressions (xxhash64 folded
+to 32 bits). The MinHash permutations (universal hashing
+`(a·h + b) mod p` — products stay < 2^63, no overflow) and SimHash
+bit-folding are Arrow-batched numpy UDFs, because per-permutation or
+per-bit expression trees would interpret k × n_shingles element hops per
+row.
+
+Incremental shape (a new batch against a persisted index, batch or
+streaming): one kernel, :func:`minhash_batch` → :func:`neardup_losers` →
+:func:`neardup_fresh` — signatures computed once, in-batch and index
+candidates verified and resolved in one action, survivors' rows and
+signatures handed to the caller to write. The index is a single
+``sigs/`` tree of ``(id, sh, sig)``; band keys are a pure function of
+``sig`` and are derived at probe time, never stored.
 """
 
 from __future__ import annotations
@@ -211,23 +220,28 @@ def prefix_jaccard_join(
     )
 
 
-def _banded(sig_df: DataFrame, id_col: str, n_bands: int, r: int) -> DataFrame:
+# the columns a near-dup probe reads from a stored ``sigs/`` tree: the
+# explicit schema skips parquet footer inference (a Spark job per probe)
+INDEX_SIGS_SCHEMA = "sh array<long>, sig array<long>"
+
+
+def _banded(sig_df: DataFrame, n_bands: int, r: int, *carry: str) -> DataFrame:
+    """One row per (doc, band): ``band_key`` joins the band's ``r``
+    slots of ``__sig``; the ``carry`` columns ride along. One
+    higher-order expression over the band ids, not ``n_bands`` struct
+    literals: the plan is built in a few driver round trips instead of
+    a hundred (0.04 s vs 0.15-0.2 s per call on a 4-vCPU host)."""
+
+    def band(b: Column) -> Column:
+        key = F.concat_ws("-", F.slice(F.col("__sig"), b * r + 1, F.lit(r)))
+        return F.struct(b.alias("band_id"), key.alias("band_key"))
+
     return sig_df.select(
-        id_col,
+        *carry,
         F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.concat_ws(
-                            "-", F.slice(F.col("__sig"), b * r + 1, r)
-                        ).alias("band_key"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
+            F.transform(F.sequence(F.lit(0), F.lit(n_bands - 1)), band)
         ).alias("__band"),
-    ).select(id_col, "__band.band_id", "__band.band_key")
+    ).select(*carry, "__band.band_id", "__band.band_key")
 
 
 def neardup_pairs_minhash(
@@ -278,7 +292,7 @@ def neardup_pairs_minhash(
     # checkpoint to storage.
     sigs = sigs.persist()
     sigs.count()
-    bands = _banded(sigs, id_col, n_bands, r)
+    bands = _banded(sigs, n_bands, r, id_col)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(b, ["band_id", "band_key"])
@@ -322,6 +336,131 @@ def neardup_pairs_minhash(
     return verified
 
 
+def minhash_batch(
+    batch_df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int = 3,
+    k: int = 64,
+    seed: int = 42,
+) -> DataFrame:
+    """Phase 1 of the near-dup batch kernel: the batch's rows with their
+    hashed grams ``__sh`` and MinHash signature ``__sig`` attached,
+    computed ONCE and materialized (local checkpoint), so the band
+    probes, the verify joins and both sink writes all read this one
+    table. Docs too short to shingle carry NULL in both columns — and so
+    does NULL text: ``size(split(NULL))`` is NULL, hence the coalesce.
+    Such docs can never match anything; they pass through fresh and are
+    never indexed.
+
+    The batch keeps its input partitioning (no :func:`ops.spread`): each
+    sink write emits one file per input split. Spreading a one-file
+    200-doc micro-batch over 4 cores quadrupled the index and silver
+    files per batch for a UDF pass of tens of milliseconds; a large
+    batch arrives in ``maxPartitionBytes`` splits anyway."""
+    has_grams = F.coalesce(
+        F.size(F.split(F.trim(F.col(text_col)), r"\s+")) >= n, F.lit(False)
+    )
+    staged = batch_df.withColumn(
+        "__sh", F.when(has_grams, gram_hashes(F.col(text_col), n))
+    )
+    return staged.withColumn(
+        "__sig",
+        F.when(
+            F.col("__sh").isNotNull(),
+            minhash_signature_udf(k, seed)(F.col("__sh")),
+        ),
+    ).localCheckpoint(eager=True)
+
+
+def neardup_losers(
+    sigd: DataFrame,
+    index_sigs: DataFrame | None,
+    id_col: str,
+    k: int = 64,
+    n_bands: int = 16,
+    threshold: float = 0.5,
+) -> tuple[set, set]:
+    """Phase 2 of the near-dup batch kernel: the ids of ``sigd``
+    (:func:`minhash_batch`) to drop, resolved in ONE action as
+    ``(in_batch, index_dups)``.
+
+    The batch's band rows (carrying their gram hashes) are broadcast
+    once and joined twice, so the exchange is shared:
+
+    - against themselves — in-batch candidate pairs ``a < b``, verified
+      by ``round(jaccard, 4) >= threshold``; the greater id of each
+      verified pair is an in-batch loser (lowest id kept, the
+      :func:`dedup.drop_neardups` rule);
+    - against bands derived at probe time from the stored signatures
+      ``index_sigs`` (``sh, sig``) — the corpus side streams
+      map-side with zero exchange; candidates verified by unrounded
+      ``jaccard >= threshold``. Every eligible doc is probed: a doc that
+      is both an in-batch loser and an index dup is dropped either way.
+
+    Band hits are not deduplicated before verify (that would cost a
+    shuffle); a pair matching in several bands is verified once per band
+    and the driver-side sets absorb the repeats. The loser ids come back
+    to the driver: a subset of the batch, which is broadcast whole
+    anyway (batch ≪ corpus is the premise of the incremental shape)."""
+    r = k // n_bands
+    # both joins must see the SAME broadcast plan for the exchange to be
+    # reused: spell out the id filter the in-batch `<` would infer. A
+    # NULL id never equi-joins, so it never loses (the anti-join rule)
+    eligible = F.col("__sig").isNotNull() & F.col(id_col).isNotNull()
+    bands = _banded(sigd.filter(eligible), n_bands, r, id_col, "__sh")
+    new = F.broadcast(
+        bands.select(
+            F.col(id_col).alias("__new"),
+            F.col("__sh").alias("__sh_new"),
+            "band_id",
+            "band_key",
+        )
+    )
+    keys = ["band_id", "band_key"]
+    jac = exact_jaccard(F.col("__sh"), F.col("__sh_new"))
+    found = (
+        bands.join(new, keys)
+        .filter(
+            (F.col(id_col) < F.col("__new")) & (F.round(jac, 4) >= threshold)
+        )
+        .select(F.lit(0).alias("__kind"), "__new")
+    )
+    if index_sigs is not None:
+        old = index_sigs.select(
+            F.col("sh").alias("__sh"), F.col("sig").alias("__sig")
+        )
+        found = found.unionByName(
+            _banded(old, n_bands, r, "__sh")
+            .join(new, keys)
+            .filter(jac >= threshold)
+            .select(F.lit(1).alias("__kind"), "__new")
+        )
+    out: tuple[set, set] = (set(), set())
+    for kind, doc in found.collect():
+        out[kind].add(doc)
+    return out
+
+
+def neardup_fresh(
+    sigd: DataFrame, losers: set, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """Phase 3 of the near-dup batch kernel: ``(fresh_docs, fresh_sigs)``
+    — the batch rows that survive, with the input's columns, and the
+    ``(id, sh, sig)`` index rows of the survivors that have a signature.
+    Both read the materialized ``sigd``; the loser set is a literal, so
+    neither can observe a write of its own result."""
+    keep = sigd
+    if losers:
+        keep = sigd.filter(
+            ~F.coalesce(F.col(id_col).isin(list(losers)), F.lit(False))
+        )
+    sigs = keep.filter(
+        F.col("__sig").isNotNull() & F.col(id_col).isNotNull()
+    ).select(id_col, F.col("__sh").alias("sh"), F.col("__sig").alias("sig"))
+    return keep.drop("__sh", "__sig"), sigs
+
+
 def incremental_neardup_minhash(
     new_docs: DataFrame,
     index_path: str,
@@ -335,153 +474,51 @@ def incremental_neardup_minhash(
 ) -> tuple[DataFrame, dict]:
     """X2 daily shape: near-dedup a NEW batch against a persisted
     signature index instead of re-running LSH over the corpus. A 100 TB
-    corpus is deduped once; every incoming batch then costs (batch LSH +
-    two corpus STREAMING passes) — never a corpus self-join.
-
-    Index layout: ``{index}/sigs`` (id, sh, sig) and ``{index}/bands``
-    (id, band_id, band_key). The batch side is BROADCAST into both
-    corpus-side joins (band match, then signature verify), so the corpus
-    tables stream map-side with zero exchange — the asymmetry (batch ≪
-    corpus) is the entire point; for corpus-sized "batches" run the full
+    corpus is deduped once; every incoming batch then costs (one batch
+    signature pass + one corpus STREAMING pass) — never a corpus
+    self-join. For corpus-sized "batches" run the full
     :func:`neardup_pairs_minhash` instead.
 
-    Steps: (1) in-batch near-dedup (full LSH pipeline on the small
-    batch, lowest id kept); (2) survivors' band keys probe the index
-    bands, candidates verified by exact hashed-gram Jaccard against the
-    index signatures — batch docs matching the corpus are dropped;
-    (3) the remaining docs' signatures and bands are appended to the
-    index (materialized first, so the result can't observe its own
-    write). Replaying a batch finds every doc already in the index
-    (Jaccard 1.0 with itself) and appends nothing. Docs too short to
-    shingle can never match anything: passed through as fresh, not
-    indexed.
+    Index layout: one ``{index}/sigs`` tree of ``(id, sh, sig)`` rows;
+    band keys are a pure function of ``sig`` and are derived at probe
+    time (:func:`neardup_losers`), never stored. The batch runs the same
+    kernel as the streaming ingest (:func:`minhash_batch` →
+    :func:`neardup_losers` → :func:`neardup_fresh`): in-batch near-dups
+    collapse to the lowest id, batch docs matching the corpus are
+    dropped, and the survivors' signatures are appended to the index.
+    Replaying a batch finds every doc already in the index (Jaccard 1.0
+    with itself) and appends nothing. Docs too short to shingle, and
+    NULL text, pass through as fresh, not indexed, counted as short.
 
-    Returns ``(fresh_docs, metrics)``.
+    Returns ``(fresh_docs, metrics)``; the metrics add up to
+    ``batch_rows``.
     """
     import os
 
-    from realtime_data_pipeline_spark import dedup as _dedup
-
-    spark = new_docs.sparkSession
-    r = k // n_bands
-    has_grams = F.size(F.split(F.trim(F.col(text_col)), r"\s+")) >= n
-    eligible = new_docs.filter(has_grams)
-    short_docs = new_docs.filter(~has_grams)
-
-    in_batch_pairs = neardup_pairs_minhash(
-        eligible, id_col, text_col, n=n, k=k, n_bands=n_bands,
-        threshold=threshold, seed=seed,
-    )
-    batch_kept = _dedup.drop_neardups(eligible, in_batch_pairs, id_col)
-    # metric counts ride on work already paid for: one combined agg
-    # splits the batch into eligible/short (was two separate scans),
-    # and n_batch_kept == sigs.count() — the signature table below has
-    # exactly one row per kept eligible doc and must be materialized
-    # anyway, so the separate batch_kept.count() action is free to drop
-    # NULL text makes has_grams NULL (size(split(NULL)) is NULL), so such
-    # rows flow through NEITHER filter above — count shorts explicitly as
-    # "definitively not enough grams" so the metrics match the rows that
-    # actually flow through (ADVICE r16: __total - __elig silently folded
-    # null-text rows into n_short)
-    _split = new_docs.agg(
-        F.sum(has_grams.cast("long")).alias("__elig"),
-        F.sum(
-            (~F.coalesce(has_grams, F.lit(True))).cast("long")
-        ).alias("__short"),
+    sigd = minhash_batch(new_docs, id_col, text_col, n=n, k=k, seed=seed)
+    counts = sigd.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.count("__sig").alias("elig"),
     ).first()
-    n_eligible = int(_split["__elig"] or 0)
-    n_short = int(_split["__short"] or 0)
-
-    sigs = (
-        ops.spread(batch_kept, id_col)
-        .select(
-            F.col(id_col), gram_hashes(F.col(text_col), n).alias("__sh")
-        )
-        .select(
-            id_col,
-            "__sh",
-            minhash_signature_udf(k, seed)(F.col("__sh")).alias("__sig"),
-        )
-        .persist()
+    n_rows, n_eligible = int(counts["rows"]), int(counts["elig"])
+    sig_dir = f"{index_path}/sigs"
+    idx = (
+        new_docs.sparkSession.read.schema(INDEX_SIGS_SCHEMA).parquet(sig_dir)
+        if os.path.exists(sig_dir)
+        else None
     )
-    n_batch_kept = sigs.count()
-    bands_new = _banded(sigs, id_col, n_bands, r)
-
-    sig_dir, band_dir = f"{index_path}/sigs", f"{index_path}/bands"
-    if os.path.exists(sig_dir):
-        idx_sigs = spark.read.parquet(sig_dir)
-        idx_bands = spark.read.parquet(band_dir)
-        cand = (
-            idx_bands.join(
-                F.broadcast(
-                    bands_new.select(
-                        F.col(id_col).alias("new_id"), "band_id", "band_key"
-                    )
-                ),
-                ["band_id", "band_key"],
-            )
-            .select(F.col(id_col).alias("old_id"), "new_id")
-            .distinct()
-        )
-        corpus_dups = (
-            idx_sigs.select(
-                F.col(id_col).alias("old_id"), F.col("sh").alias("__sh_old")
-            )
-            .join(F.broadcast(cand), "old_id")
-            .join(
-                F.broadcast(
-                    sigs.select(
-                        F.col(id_col).alias("new_id"),
-                        F.col("__sh").alias("__sh_new"),
-                    )
-                ),
-                "new_id",
-            )
-            .filter(
-                exact_jaccard(F.col("__sh_old"), F.col("__sh_new"))
-                >= threshold
-            )
-            .select(F.col("new_id").alias(id_col))
-            .distinct()
-        )
-        fresh_core = batch_kept.join(corpus_dups, id_col, "left_anti")
-    else:
-        fresh_core = batch_kept
-    fresh_core = fresh_core.localCheckpoint(eager=True)
-    n_fresh_core = fresh_core.count()
-
-    if n_fresh_core:
-        fresh_sigs = (
-            sigs.join(F.broadcast(fresh_core.select(id_col)), id_col)
-            .select(
-                F.col(id_col),
-                F.col("__sh").alias("sh"),
-                F.col("__sig").alias("sig"),
-            )
-            .localCheckpoint(eager=True)
-        )
+    in_batch, index_dups = neardup_losers(
+        sigd, idx, id_col, k=k, n_bands=n_bands, threshold=threshold
+    )
+    losers = in_batch | index_dups
+    fresh, fresh_sigs = neardup_fresh(sigd, losers, id_col)
+    if n_eligible > len(losers):
         fresh_sigs.write.mode("append").parquet(sig_dir)
-        _banded(
-            fresh_sigs.select(
-                id_col,
-                F.col("sh").alias("__sh"),
-                F.col("sig").alias("__sig"),
-            ),
-            id_col,
-            n_bands,
-            r,
-        ).write.mode("append").parquet(band_dir)
-    sigs.unpersist()
-
-    fresh = fresh_core.unionByName(short_docs)
-    # metrics reuse the counts already taken above — never
-    # new_docs.count() + fresh.count(), which would re-scan the batch
-    # twice more (a daily batch at corpus scale is not free to scan)
     return fresh, {
-        "batch_rows": n_eligible + n_short,
-        "in_batch_dropped": n_eligible - n_batch_kept,
-        "corpus_dups": n_batch_kept - n_fresh_core,
-        "fresh_rows": n_fresh_core + n_short,
+        "batch_rows": n_rows,
+        "in_batch_dropped": len(in_batch),
+        "corpus_dups": len(index_dups - in_batch),
+        "fresh_rows": n_rows - len(losers),
     }
 
 

@@ -40,6 +40,39 @@ from realtime_data_pipeline_spark import dq
 SINK_POOL_WORKERS = int(os.environ.get("RDP_SINK_POOL_WORKERS", "2"))
 
 
+def _write_batch_partitions(
+    batch_id: int, sinks: tuple[tuple[DataFrame, str], ...]
+) -> None:
+    """Write each ``(frame, path)`` sink under its own ``batch_id=N``
+    hive partition with dynamic overwrite, so a replayed micro-batch
+    replaces exactly its own partitions (foreachBatch is at-least-once).
+    The writes are independent jobs and run from a
+    ``SINK_POOL_WORKERS``-thread pool (guide §2.6): one sink's tasks
+    back-fill executors freed by another's tail instead of waiting for
+    its last task + commit. The pool threads inherit the caller's Spark
+    local properties, so the writes run under the caller's job group
+    (a streaming query's, or a probe's) like the rest of the batch."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    @inheritable_thread_target(sinks[0][0].sparkSession)
+    def _sink(sink: tuple[DataFrame, str]) -> None:
+        df, path = sink
+        (
+            df.withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(path)
+        )
+
+    with ThreadPoolExecutor(max_workers=SINK_POOL_WORKERS) as pool:
+        # list() drains the iterator so the first sink's exception
+        # propagates and the others still complete or fail loudly
+        list(pool.map(_sink, sinks))
+
+
 def read_file_stream(
     spark: SparkSession,
     inbox: str,
@@ -689,33 +722,15 @@ def dq_route_batch(
     survives concurrency — cached-partition computation is serialized
     per block by the BlockManager, so whichever write touches a
     partition first computes it and the other blocks on the cache."""
-    from concurrent.futures import ThreadPoolExecutor
-
     batch_df.persist()
     try:
         clean, bad = dq.split_clean_violations(batch_df, rules)
         if curate is not None:
             clean = curate(clean)
 
-        def _sink(out_path):
-            out, path = out_path
-            (
-                out.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(path)
-            )
-
-        with ThreadPoolExecutor(max_workers=SINK_POOL_WORKERS) as pool:
-            # list() drains the iterator so the first sink's exception
-            # propagates and the second still completes or fails loudly
-            list(
-                pool.map(
-                    _sink,
-                    ((clean, silver_path), (bad, quarantine_path)),
-                )
-            )
+        _write_batch_partitions(
+            batch_id, ((clean, silver_path), (bad, quarantine_path))
+        )
     finally:
         batch_df.unpersist()
 
@@ -799,34 +814,14 @@ def dedup_ingest_batch(
                 out = curate(out)
 
             # the silver and index writes are independent jobs over the
-            # already-checkpointed fresh set — run them from a 2-thread
-            # pool (guide §2.6) so the index write's tasks back-fill the
-            # silver write's tail instead of queueing behind its commit
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _sink(df_path):
-                df_, path = df_path
+            # already-checkpointed fresh set
+            _write_batch_partitions(
+                batch_id,
                 (
-                    df_.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(path)
-                )
-
-            with ThreadPoolExecutor(max_workers=SINK_POOL_WORKERS) as pool:
-                list(
-                    pool.map(
-                        _sink,
-                        (
-                            (out, silver_path),
-                            (
-                                fresh.select(F.col("__fp").alias("fp")),
-                                index_path,
-                            ),
-                        ),
-                    )
-                )
+                    (out, silver_path),
+                    (fresh.select(F.col("__fp").alias("fp")), index_path),
+                ),
+            )
     finally:
         batch_df.unpersist()
 
@@ -880,136 +875,52 @@ def neardup_ingest_batch(
     seed: int = 42,
 ) -> None:
     """Route ONE micro-batch through NEAR-dup dedup against the persisted
-    MinHash index: in-batch LSH dedup, band-probe + exact-Jaccard verify
-    against all PRIOR batches' signatures, then write fresh docs +
-    their signatures/bands under ``batch_id=N`` dynamic-overwrite
-    partitions on every sink. Same exactly-once discipline as
+    MinHash index, with the batch kernel shared with
+    :func:`neardup.incremental_neardup_minhash`: signatures computed once
+    (:func:`neardup.minhash_batch`), in-batch and index candidates
+    verified and resolved in one action (:func:`neardup.neardup_losers`),
+    then fresh docs and their signatures written under ``batch_id=N``
+    dynamic-overwrite partitions of silver and of the index's single
+    ``sigs/`` tree (band keys are derived from ``sig`` at probe time,
+    never stored). Same exactly-once discipline as
     :func:`dedup_ingest_batch`: the index probe EXCLUDES the batch's own
-    partitions, so a replay after a crash between the index write and
-    the checkpoint commit recomputes the identical fresh set instead of
+    partition, so a replay after a crash between the index write and the
+    checkpoint commit recomputes the identical fresh set instead of
     near-dup-matching itself into an empty one. Docs too short to
-    shingle pass through fresh and unindexed (they can never match).
+    shingle, and NULL text, pass through fresh and unindexed (they can
+    never match).
 
     The index probe and writes run under :func:`medallion._merge_lock`
-    — the lock :func:`compact_neardup_index` holds for its rename swaps
-    — so a batch can never observe a compaction's between-renames window
-    where a subtree is briefly absent (it would have admitted every
+    — the lock :func:`compact_neardup_index` holds for its rename swap —
+    so a batch can never observe a compaction's between-renames window
+    where ``sigs/`` is briefly absent (it would have admitted every
     near-dup as fresh); a crashed swap is repaired first via
-    :func:`_recover_index_swap` on both subtrees."""
-    from realtime_data_pipeline_spark import dedup as _dedup
+    :func:`_recover_index_swap`. The signature pass runs before the
+    lock is taken."""
     from realtime_data_pipeline_spark import neardup as _nd
     from realtime_data_pipeline_spark.medallion import _merge_lock
 
-    spark = batch_df.sparkSession
-    r = k // n_bands
-    # coalesce: size(split(NULL)) is NULL, and under three-valued logic
-    # a NULL predicate fails BOTH filters — the doc would vanish from
-    # silver and index alike. NULL text can never match anything, so it
-    # belongs on the pass-through path with the too-short docs.
-    has_grams = F.coalesce(
-        F.size(F.split(F.trim(F.col(text_col)), r"\s+")) >= n, F.lit(False)
-    )
-    batch_df = batch_df.persist()
-    eligible = batch_df.filter(has_grams)
-    short_docs = batch_df.filter(~has_grams)
-
-    in_batch_pairs = _nd.neardup_pairs_minhash(
-        eligible, id_col, text_col, n=n, k=k, n_bands=n_bands,
-        threshold=threshold, seed=seed,
-    )
-    batch_kept = _dedup.drop_neardups(eligible, in_batch_pairs, id_col)
-    sigs = (
-        batch_kept.select(
-            F.col(id_col), _nd.gram_hashes(F.col(text_col), n).alias("__sh")
-        )
-        .select(
-            id_col,
-            "__sh",
-            _nd.minhash_signature_udf(k, seed)(F.col("__sh")).alias("__sig"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    bands_new = _nd._banded(sigs, id_col, n_bands, r)
-
-    sig_dir, band_dir = f"{index_path}/sigs", f"{index_path}/bands"
+    sigd = _nd.minhash_batch(batch_df, id_col, text_col, n=n, k=k, seed=seed)
+    sig_dir = f"{index_path}/sigs"
     with _merge_lock(index_path, op="neardup-ingest"):
         _recover_index_swap(sig_dir)
-        _recover_index_swap(band_dir)
+        idx = None
         if os.path.exists(sig_dir):
             # exclude own batch partition: replay safety (see docstring)
-            idx_sigs = spark.read.parquet(sig_dir).filter(
-                F.col("batch_id") != batch_id
-            )
-            idx_bands = spark.read.parquet(band_dir).filter(
-                F.col("batch_id") != batch_id
-            )
-            cand = (
-                idx_bands.join(
-                    F.broadcast(
-                        bands_new.select(
-                            F.col(id_col).alias("new_id"), "band_id", "band_key"
-                        )
-                    ),
-                    ["band_id", "band_key"],
+            idx = (
+                batch_df.sparkSession.read.schema(
+                    f"{_nd.INDEX_SIGS_SCHEMA}, batch_id long"
                 )
-                .select(F.col(id_col).alias("old_id"), "new_id")
-                .distinct()
+                .parquet(sig_dir)
+                .filter(F.col("batch_id") != batch_id)
             )
-            corpus_dups = (
-                idx_sigs.select(
-                    F.col(id_col).alias("old_id"), F.col("sh").alias("__sh_old")
-                )
-                .join(F.broadcast(cand), "old_id")
-                .join(
-                    F.broadcast(
-                        sigs.select(
-                            F.col(id_col).alias("new_id"),
-                            F.col("__sh").alias("__sh_new"),
-                        )
-                    ),
-                    "new_id",
-                )
-                .filter(
-                    _nd.exact_jaccard(F.col("__sh_old"), F.col("__sh_new"))
-                    >= threshold
-                )
-                .select(F.col("new_id").alias(id_col))
-                .distinct()
-            )
-            fresh_core = batch_kept.join(corpus_dups, id_col, "left_anti")
-        else:
-            fresh_core = batch_kept
-        fresh_core = fresh_core.localCheckpoint(eager=True)
-        fresh_ids = fresh_core.select(id_col)
-
-        def _bwrite(df: DataFrame, path: str) -> None:
-            (
-                df.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(path)
-            )
-
-        _bwrite(fresh_core.unionByName(short_docs), silver_path)
-        fresh_sigs = sigs.join(F.broadcast(fresh_ids), id_col).select(
-            id_col, F.col("__sh").alias("sh"), F.col("__sig").alias("sig")
+        in_batch, index_dups = _nd.neardup_losers(
+            sigd, idx, id_col, k=k, n_bands=n_bands, threshold=threshold
         )
-        _bwrite(fresh_sigs, sig_dir)
-        _bwrite(
-            _nd._banded(
-                fresh_sigs.select(
-                    id_col,
-                    F.col("sh").alias("__sh"),
-                    F.col("sig").alias("__sig"),
-                ),
-                id_col,
-                n_bands,
-                r,
-            ),
-            band_dir,
+        docs, sigs = _nd.neardup_fresh(sigd, in_batch | index_dups, id_col)
+        _write_batch_partitions(
+            batch_id, ((docs, silver_path), (sigs, sig_dir))
         )
-    batch_df.unpersist()
 
 
 def neardup_ingest_stream(
@@ -1025,9 +936,10 @@ def neardup_ingest_stream(
     """Streaming NEAR-dup ingest: each micro-batch is near-deduplicated
     (MinHash-LSH + exact-Jaccard verify) against every prior batch via
     the persisted signature index — only novel documents land in silver.
-    The cross-batch cost is (batch LSH + band probe of the index), never
-    a corpus self-join; exactly-once via batch-scoped partitions on all
-    three sinks (:func:`neardup_ingest_batch`)."""
+    The cross-batch cost is (one batch signature pass + one band probe
+    of the stored signatures), never a corpus self-join; exactly-once
+    via batch-scoped partitions on both sinks
+    (:func:`neardup_ingest_batch`)."""
 
     def route(batch_df: DataFrame, batch_id: int) -> None:
         neardup_ingest_batch(
@@ -1064,9 +976,9 @@ def fuzzy_ingest_batch(
     differs by ≤ ``max_dist`` edits from an already-ingested entity is
     dropped as a duplicate.
 
-    Index layout mirrors :func:`neardup_ingest_batch`'s two subtrees:
-    ``vars/`` (vh, id) — the blocking structure, 8-byte hashes only —
-    and ``keys/`` (id, key) — the verify strings, one row per entity
+    Index layout is two subtrees: ``vars/`` (vh, id) — the blocking
+    structure, 8-byte hashes only — and ``keys/`` (id, key) — the verify
+    strings, one row per entity
     (never per variant). Candidate = index variant-hash ∩ batch
     variant-hash (complete for d ≤ 2 by the symmetric-delete pigeonhole
     argument, `fuzzy.py`); verify joins the ≤candidate-bounded key
@@ -1884,42 +1796,43 @@ def compact_dedup_index(spark: SparkSession, index_path: str) -> dict:
 
 def compact_neardup_index(spark: SparkSession, index_path: str) -> dict:
     """Maintenance for the streaming near-dup MinHash index
-    (:func:`neardup_ingest_batch`'s ``sigs/`` + ``bands/`` subtrees,
-    each ``batch_id=N``-partitioned): fold both subtrees' per-batch
-    partitions into ``batch_id=-1`` under ONE lock hold, so a reader
-    never sees one subtree folded and the other mid-swap. Each subtree
-    swap is individually crash-repaired (:func:`_recover_index_swap` on
-    sigs first, then bands — a crash between the two folds leaves both
-    complete, just one still unfolded). Replay safety as the siblings:
-    folded rows read as prior corpus under the own-partition
-    exclusion."""
+    (:func:`neardup_ingest_batch`'s single ``sigs/`` tree,
+    ``batch_id=N``-partitioned): fold its per-batch partitions into
+    ``batch_id=-1`` under the merge lock, crash-repaired like the
+    siblings (:func:`_recover_index_swap`). Band keys are derived from
+    ``sig`` at probe time, so there is nothing else to fold; a
+    ``bands/`` tree left by an older index layout is ignored. Replay
+    safety as the siblings: folded rows read as prior corpus under the
+    own-partition exclusion. A not-yet-created index is a clean
+    zero-count no-op."""
     from realtime_data_pipeline_spark.medallion import _merge_lock
 
     index_path = os.path.normpath(index_path)
     sig_dir = os.path.join(index_path, "sigs")
-    band_dir = os.path.join(index_path, "bands")
     with _merge_lock(index_path, op="neardup-compact"):
-        out = {"rows": 0}
-        before = after = 0
-        for d in (sig_dir, band_dir):
-            _recover_index_swap(d)
-            if not os.path.isdir(d):
-                continue  # index half never written (e.g. no eligible docs)
-            before += _count_batch_dirs(d)
-            out["rows"] += _fold_batch_partitions(spark, d, ["batch_id"])
-            after += _count_batch_dirs(d)
-        out["batch_partitions_before"] = before
-        out["batch_partitions_after"] = after
-        return out
+        _recover_index_swap(sig_dir)
+        if not os.path.isdir(sig_dir):
+            return {
+                "batch_partitions_before": 0,
+                "batch_partitions_after": 0,
+                "rows": 0,
+            }
+        before = _count_batch_dirs(sig_dir)
+        rows = _fold_batch_partitions(spark, sig_dir, ["batch_id"])
+        return {
+            "batch_partitions_before": before,
+            "batch_partitions_after": _count_batch_dirs(sig_dir),
+            "rows": rows,
+        }
 
 
 def compact_fuzzy_index(spark: SparkSession, index_path: str) -> dict:
     """Maintenance for the streaming fuzzy entity-resolution index
     (:func:`fuzzy_ingest_batch`'s ``vars/`` + ``keys/`` subtrees, each
     ``batch_id=N``-partitioned): fold both subtrees' per-batch
-    partitions into ``batch_id=-1`` under ONE lock hold — the exact
-    discipline of :func:`compact_neardup_index` (per-subtree
-    crash-repaired rename swaps; folded rows read as prior corpus under
+    partitions into ``batch_id=-1`` under ONE lock hold — the
+    discipline of :func:`compact_neardup_index`, per subtree
+    (crash-repaired rename swaps; folded rows read as prior corpus under
     the own-partition exclusion, so a folded-batch replay computes zero
     fresh rows and overwrites nothing). A not-yet-created index is a
     clean zero-count no-op."""

@@ -1,7 +1,7 @@
 """Incremental-index LSH recall drift (round-6 verdict #5).
 
 LSH_RECALL.json sweeps the ONE-SHOT MinHash path; the daily-ingest path
-(`neardup.incremental_neardup_minhash`) instead accumulates its band/
+(`neardup.incremental_neardup_minhash`) instead accumulates its
 signature index across batches. This study measures whether that
 accumulation loses recall: the planted-dup corpus is split into N=10
 deterministic pseudo-daily batches (hash of doc_id, so each dup pair's

@@ -144,12 +144,7 @@ def minhash_candidates(corpus, k: int, n_bands: int) -> set:
         neardup.minhash_signature_udf(k, 42)(F.col("__sh")).alias("__sig"),
     ).persist()
     sigs.count()
-    bands = neardup._banded(
-        sigs.withColumn("__sh", F.array().cast("array<long>")),
-        "doc_id",
-        n_bands,
-        r,
-    )
+    bands = neardup._banded(sigs, n_bands, r, "doc_id")
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(b, ["band_id", "band_key"])

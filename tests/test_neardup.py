@@ -298,6 +298,93 @@ def test_incremental_fingerprint_dedup_across_batches(spark, tmp_path):
     assert spark.read.parquet(idx).count() == 3
 
 
+def test_neardup_batch_kernel_against_persisted_index(spark, tmp_path):
+    """Fast gate for the persisted-index near-dup path that both the
+    streaming ingest and the batch twin run: an in-batch near-dup drops
+    (lowest id kept), a near-dup of the index drops, short and NULL-text
+    docs pass through unindexed, a ``batch_id`` replay leaves silver
+    unchanged, the twin's metrics add up to the batch size, and a warm
+    micro-batch stays within its Spark job budget."""
+    from realtime_data_pipeline_spark import streaming
+
+    base_a = ("the quick brown fox jumps over the lazy dog while the eager "
+              "spark engine shuffles partitions across the busy cluster")
+    base_b = ("training data pipelines deduplicate documents with minhash "
+              "signatures banded into buckets joined by equality at scale")
+    novel = ("completely different content about astronomy telescopes "
+             "observing distant quasars through adaptive optics tonight")
+    mut = lambda s, w: s.replace(w, "zzzmutant")  # noqa: E731
+    schema = "doc_id long, text string"
+    idx, silver = str(tmp_path / "index"), str(tmp_path / "silver")
+
+    def ingest(rows, batch_id):
+        streaming.neardup_ingest_batch(
+            spark.createDataFrame(rows, schema), batch_id, idx, silver,
+            "doc_id", "text",
+        )
+
+    def silver_rows():
+        return {(r.doc_id, r.batch_id)
+                for r in spark.read.parquet(silver).collect()}
+
+    def sig_ids():
+        return {r.doc_id for r in spark.read.parquet(f"{idx}/sigs").collect()}
+
+    # doc 3 is an in-batch near-dup of doc 1; 4 is too short; 5 is NULL
+    ingest([(3, mut(base_a, "lazy")), (1, base_a), (2, base_b),
+            (4, "hi"), (5, None)], 0)
+    assert {d for d, _ in silver_rows()} == {1, 2, 4, 5}
+    assert sig_ids() == {1, 2}
+
+    # doc 6 is a near-dup of indexed doc 2; one warm micro-batch against
+    # a non-empty index, counted under its own job group (the pre-kernel
+    # batch ran 24-32 jobs: two signature passes, per-step actions)
+    sc = spark.sparkContext
+    batch1 = [(6, mut(base_b, "buckets")), (7, novel)]
+    sc.setJobGroup("neardup-warm-batch", "neardup warm batch")
+    try:
+        ingest(batch1, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("neardup-warm-batch")
+    assert len(jobs) <= 5, f"{len(jobs)} Spark jobs for one micro-batch"
+    got = silver_rows()
+    assert {d for d, _ in got} == {1, 2, 4, 5, 7}
+    assert sig_ids() == {1, 2, 7}
+
+    # replay batch 1: its own index partition is excluded from the probe
+    ingest(batch1, 1)
+    assert silver_rows() == got
+    assert sig_ids() == {1, 2, 7}
+
+    # the batch twin: NULL text passes through fresh and counts as short
+    twin = str(tmp_path / "twin")
+    fresh, m = neardup.incremental_neardup_minhash(
+        spark.createDataFrame(
+            [(1, "alpha beta gamma delta epsilon"), (2, None), (3, "hi")],
+            schema,
+        ),
+        twin, "doc_id", "text",
+    )
+    assert {r.doc_id for r in fresh.collect()} == {1, 2, 3}
+    assert m == {"batch_rows": 3, "in_batch_dropped": 0, "corpus_dups": 0,
+                 "fresh_rows": 3}
+    fresh, m = neardup.incremental_neardup_minhash(
+        spark.createDataFrame(
+            [(10, "alpha beta gamma delta epsilon"), (11, base_a),
+             (12, mut(base_a, "lazy")), (13, None)],
+            schema,
+        ),
+        twin, "doc_id", "text",
+    )
+    assert {r.doc_id for r in fresh.collect()} == {11, 13}
+    assert m == {"batch_rows": 4, "in_batch_dropped": 1, "corpus_dups": 1,
+                 "fresh_rows": 2}
+    assert {r.doc_id for r in spark.read.parquet(
+        f"{twin}/sigs").collect()} == {1, 11}
+
+
 @pytest.mark.slow
 def test_incremental_neardup_minhash_across_batches(spark, tmp_path):
     """X2 daily shape: in-batch near-dups collapse, near-dups of the

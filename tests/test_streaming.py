@@ -650,7 +650,7 @@ def test_neardup_ingest_stream_cross_batch_exactly_once(spark, tmp_path):
     # near-dups 3 and 5 dropped; short doc 6 passes through
     assert {d for (d, _) in got} == {1, 2, 4, 6}
 
-    # replay the batch carrying docs 3/4/6 — its sigs/bands are already
+    # replay the batch carrying docs 3/4/6 — its signatures are already
     # indexed (crash-between-writes window); result must be identical
     batch_of_4 = next(b for (d, b) in got if d == 4)
     replay = spark.createDataFrame(
@@ -1908,12 +1908,15 @@ def test_compact_dedup_index_bounds_partitions_replay_safe(
 
 
 @pytest.mark.slow
-def test_compact_neardup_index_folds_both_subtrees(spark, tmp_path):
-    """compact_neardup_index folds sigs/ AND bands/ into batch_id=-1
-    under one lock hold: the signature set is unchanged, a later
-    near-duplicate still drops against the compacted index, and a novel
-    doc keeps merging."""
+def test_compact_neardup_index_folds_sigs_tree(spark, tmp_path):
+    """compact_neardup_index folds the single sigs/ tree into
+    batch_id=-1 under the merge lock: the signature set is unchanged, a
+    later near-duplicate still drops against the compacted index, a
+    novel doc keeps merging, and a bands/ tree left by the older
+    two-tree layout is ignored (bands are derived from sig at probe
+    time)."""
     import os
+    import shutil
 
     base = (
         "the quick brown fox jumps over the lazy dog again and again "
@@ -1933,6 +1936,10 @@ def test_compact_neardup_index_folds_both_subtrees(spark, tmp_path):
                            "unrelated to anything prior here today")], 0)
     ingest([(3, "yet another third document with its own fresh "
                 "vocabulary and no overlap at all anywhere")], 1)
+    assert sorted(os.listdir(idx)) == ["sigs"]
+    # an older index's bands/ subtree: left alone, never read
+    legacy = os.path.join(idx, "bands", "batch_id=0")
+    shutil.copytree(os.path.join(idx, "sigs", "batch_id=0"), legacy)
 
     def sig_ids():
         return {
@@ -1941,14 +1948,15 @@ def test_compact_neardup_index_folds_both_subtrees(spark, tmp_path):
 
     ids0 = sig_ids()
     m = streaming.compact_neardup_index(spark, idx)
-    assert m["batch_partitions_before"] == 4  # 2 batches x 2 subtrees
-    assert m["batch_partitions_after"] == 2
-    for sub in ("sigs", "bands"):
-        assert [
-            d
-            for d in os.listdir(os.path.join(idx, sub))
-            if d.startswith("batch_id=")
-        ] == ["batch_id=-1"]
+    assert m["batch_partitions_before"] == 2  # 2 batches x 1 tree
+    assert m["batch_partitions_after"] == 1
+    assert m["rows"] == len(ids0) == 3
+    assert [
+        d
+        for d in os.listdir(os.path.join(idx, "sigs"))
+        if d.startswith("batch_id=")
+    ] == ["batch_id=-1"]
+    assert os.listdir(os.path.join(idx, "bands")) == ["batch_id=0"]
     assert sig_ids() == ids0
 
     # near-dup of folded doc 1 drops; novel doc lands
