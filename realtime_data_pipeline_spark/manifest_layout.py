@@ -5,11 +5,11 @@ metadata avoid directory listing altogether").
 Why it exists (round 17): a table laid out as one hive directory per
 hash bucket / IVF cell pays the partitioned-write commit protocol PER
 DIRECTORY it touches — measured on this box at tens of ms each,
-driver-serial (`scripts/commit_floor_isolate.py`: a 90-dir dynamic
-overwrite of ~200k rows costs 7.4 s where the identical bytes written
-flat with a manifest swap cost 0.9 s). That cost is constant in data
-size, so at 100 TB it is pure driver-side overhead per merge/append —
-the same class of data-size-free waste as plan explosion.
+driver-serial (a 90-dir dynamic overwrite of ~200k rows measured
+7.4 s where the identical bytes written flat with a manifest swap cost
+0.9 s). That cost is constant in data size, so at 100 TB it is pure
+driver-side overhead per merge/append — the same class of
+data-size-free waste as plan explosion.
 
 Layout::
 

@@ -1000,10 +1000,10 @@ def scd2_merge(
     directories, so a merge's write commits ONE directory and swaps one
     JSON pointer instead of paying the dynamic-partition-overwrite
     commit protocol per affected bucket directory (driver-serial, tens
-    of ms each — `scripts/commit_floor_isolate.py` measures a ~90-dir
-    dynamic overwrite at 7.4 s vs 0.9 s for the identical bytes under
-    the manifest shape; the cost is constant in data size, i.e. pure
-    per-merge driver overhead at 100 TB). It also removes the
+    of ms each — a ~90-dir dynamic overwrite measured 7.4 s vs 0.9 s
+    for the identical bytes under the manifest shape; the cost is
+    constant in data size, i.e. pure per-merge driver overhead at
+    100 TB). It also removes the
     pre-write ``localCheckpoint`` (a new gen dir never overwrites what
     the merge reads). ``layout='hive'`` keeps the previous
     dir-per-bucket layout (readable by any engine without the
@@ -1223,7 +1223,7 @@ def _scd2_merge_locked(
         # builds a file index by listing every bucket dir before the
         # partition filter prunes — an O(n_buckets) driver-side listing
         # term per merge (measured slope 2.17x at 10x history with 640
-        # buckets, BENCH_scale_r06). Constructing the leaf paths from
+        # buckets). Constructing the leaf paths from
         # the batch's bucket set makes the listing O(|affected|); a
         # bucket dir that does not exist simply has no stored history
         # (first observation of those keys) and is skipped.

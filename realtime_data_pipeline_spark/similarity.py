@@ -747,8 +747,8 @@ def build_ivf_index(
     generation directory plus a cell -> gen pointer file
     (:mod:`~realtime_data_pipeline_spark.manifest_layout`) instead of
     one ``cell=N`` hive directory per cell: the write pays ONE commit,
-    not n_centroids of them (~tens of ms each, driver-serial —
-    `scripts/commit_floor_isolate.py`), and probing prunes by manifest
+    not n_centroids of them (~tens of ms each, driver-serial: a
+    ~90-dir write measured 7.4 s vs 0.9 s), and probing prunes by manifest
     pointer + row-group stats instead of directory names.
     ``layout='hive'`` keeps the engine-portable dir-per-cell layout.
     Appends and searches auto-detect the layout on disk."""

@@ -22,22 +22,19 @@ Scale/ops posture:
 from __future__ import annotations
 
 import os
-import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 from realtime_data_pipeline_spark import dq
 
 # Independent per-batch sink writes run from a pool of this many driver
-# threads (guide §2.6 back-fill; r16). 2 = overlap the pair of sinks;
-# 1 = serialize them — the gate for saturated clusters where two
-# concurrent jobs only fight for slots (measured both regimes in
-# OPTIMIZATION_r17.md; override per deployment or per probe run).
-SINK_POOL_WORKERS = int(os.environ.get("RDP_SINK_POOL_WORKERS", "2"))
+# threads (guide §2.6 back-fill): 2 overlaps the pair of sinks, so one
+# sink's tasks back-fill executors freed by the other's tail.
+SINK_POOL_WORKERS = 2
 
 
 def _write_batch_partitions(
@@ -71,6 +68,29 @@ def _write_batch_partitions(
         # list() drains the iterator so the first sink's exception
         # propagates and the others still complete or fail loudly
         list(pool.map(_sink, sinks))
+
+
+def _start_batch_stream(
+    df: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    checkpoint: str,
+    available_now: bool,
+    output_mode: str = "update",
+) -> StreamingQuery:
+    """Start ``fn`` as the checkpointed ``foreachBatch`` sink of ``df``:
+    one catch-up run when ``available_now`` (still bounded by the
+    source's ``maxFilesPerTrigger``), else a continuous stream. Callers
+    pass a closure that looks their batch function up when each batch
+    runs, not when the stream starts, so a wrapper installed on the
+    module function (perfbench's traced mode) sees every batch."""
+    writer = (
+        df.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .outputMode(output_mode)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def read_file_stream(
@@ -793,8 +813,13 @@ def dedup_ingest_batch(
         with _merge_lock(index_path, op="dedup-ingest"):
             _recover_index_swap(index_path)
             if os.path.exists(index_path):
-                idx = spark.read.parquet(index_path).filter(
-                    F.col("batch_id") != batch_id
+                # explicit schema: a first batch with no fresh rows leaves
+                # the index dir holding no files, and inferring a schema
+                # from it would fail every later batch
+                idx = (
+                    spark.read.schema("fp string, batch_id long")
+                    .parquet(index_path)
+                    .filter(F.col("batch_id") != batch_id)
                 )
                 fresh = batch_unique.join(
                     idx.select(F.col("fp").alias("__fp")), "__fp", "left_anti"
@@ -851,14 +876,7 @@ def dedup_ingest_stream(
             curate=curate,
         )
 
-    writer = (
-        df.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batch_stream(df, route, checkpoint, available_now)
 
 
 def neardup_ingest_batch(
@@ -947,14 +965,7 @@ def neardup_ingest_stream(
             **lsh_params,
         )
 
-    writer = (
-        df.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batch_stream(df, route, checkpoint, available_now)
 
 
 def fuzzy_ingest_batch(
@@ -1012,15 +1023,30 @@ def fuzzy_ingest_batch(
 
         var_dir = f"{index_path}/vars"
         key_dir = f"{index_path}/keys"
+        # explicit index schemas: a first batch with no fresh rows
+        # leaves the subtrees holding no files, and inferring a schema
+        # from them would fail every later batch
+        id_field = batch_df.schema[id_col]
+        batch_field = StructField("batch_id", LongType())
+        vars_schema = StructType(
+            [id_field, StructField("__vh", LongType()), batch_field]
+        )
+        keys_schema = StructType(
+            [id_field, batch_df.schema[key_col], batch_field]
+        )
         with _merge_lock(index_path, op="fuzzy-ingest"):
             _recover_index_swap(var_dir)
             _recover_index_swap(key_dir)
             if os.path.exists(var_dir):
-                idx_vars = spark.read.parquet(var_dir).filter(
-                    F.col("batch_id") != batch_id
+                idx_vars = (
+                    spark.read.schema(vars_schema)
+                    .parquet(var_dir)
+                    .filter(F.col("batch_id") != batch_id)
                 )
-                idx_keys = spark.read.parquet(key_dir).filter(
-                    F.col("batch_id") != batch_id
+                idx_keys = (
+                    spark.read.schema(keys_schema)
+                    .parquet(key_dir)
+                    .filter(F.col("batch_id") != batch_id)
                 )
                 cand = (
                     idx_vars.join(
@@ -1062,25 +1088,17 @@ def fuzzy_ingest_batch(
             else:
                 fresh = batch_kept
             fresh = fresh.localCheckpoint(eager=True)
-            fresh_ids = fresh.select(id_col)
-
-            def _bwrite(df: DataFrame, path: str) -> None:
+            fresh_vars = new_vars.join(
+                F.broadcast(fresh.select(id_col)), id_col
+            ).select(id_col, "__vh")
+            _write_batch_partitions(
+                batch_id,
                 (
-                    df.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(path)
-                )
-
-            _bwrite(fresh.unionByName(null_keys), silver_path)
-            _bwrite(
-                new_vars.join(F.broadcast(fresh_ids), id_col).select(
-                    id_col, "__vh"
+                    (fresh.unionByName(null_keys), silver_path),
+                    (fresh_vars, var_dir),
+                    (fresh.select(id_col, key_col), key_dir),
                 ),
-                var_dir,
             )
-            _bwrite(fresh.select(id_col, key_col), key_dir)
     finally:
         batch_df.unpersist()
 
@@ -1109,30 +1127,7 @@ def fuzzy_ingest_stream(
             max_dist=max_dist,
         )
 
-    writer = (
-        df.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-# Per-stage wall clock of the LAST semdedup ingest batches, keyed
-# stage -> cumulative seconds (+ "batches" count) since the last
-# clear() — the decomposition bench.py records so the steady-state
-# marginal names its dominant term instead of guessing (r13 verdict
-# #6; same pattern as cli.LAST_ASSEMBLE_STAGES). Updated per batch by
-# semdedup_ingest_batch; callers clear() before a run they want
-# isolated. Diagnostic only — never read by the operator itself.
-LAST_SEMDEDUP_STAGES: dict[str, float] = {}
-
-
-def _sem_stage(stage: str, dt: float) -> None:
-    LAST_SEMDEDUP_STAGES[stage] = round(
-        LAST_SEMDEDUP_STAGES.get(stage, 0.0) + dt, 3
-    )
+    return _start_batch_stream(df, route, checkpoint, available_now)
 
 
 def semdedup_ingest_batch(
@@ -1161,29 +1156,28 @@ def semdedup_ingest_batch(
     checkpoint commit replays into the identical fresh set instead of
     dup-matching itself into an empty one. The index is laid out
     ``bucket=M/batch_id=N`` — bucket FIRST, so the probe reads only the
-    batch's bucket directories (one multi-path basePath read, the
-    flat-at-10× spelling measured in BENCH_scale_r08.json) and the
+    batch's bucket directories (one multi-path basePath read: probe
+    cost stayed flat, 1.06×, across a 10× index ramp) and the
     replay exclusion rides the ``batch_id`` partition column underneath.
     NULL-embedding rows can match nothing and pass through to silver
     unindexed. ``centroids=`` swaps in the trained quantizer — the
     documented default for τ < 0.5 (LSH_RECALL.json).
 
-    ``index_layout`` (round-15, verdict r14 item #2 — the measured
-    answer to the index_write floor the r14 stage decomposition named):
+    ``index_layout`` (the measured answer to the per-batch index-write
+    floor):
     ``"bucket"`` (default) lays the index out ``bucket=M/batch_id=N``
     — the probe dir-prunes to the batch's buckets, but every batch's
     dynamic-overwrite commit walks ~2^n_bits partition directories
     (~23 ms/dir: the constant-per-batch floor that dominated the
-    multibatch leg at bench batch sizes). ``"flat"`` partitions by
+    multi-batch ingest at small batch sizes). ``"flat"`` partitions by
     ``batch_id`` ONLY (bucket becomes a plain column, files clustered
     on it via repartition+sortWithinPartitions so parquet min/max
     stats still prune row groups): the commit touches ONE directory
     per batch, trading dir-pruned probes for a footer-read of the
     whole index — the right trade while the index is small or batches
     are frequent; at a large index the bucket layout's probe pruning
-    wins back. Crossover MEASURED (round-16, perturbed-copy indexes,
-    BENCH_semdedup_layout_r16.json): with bench-shaped batches
-    (~500 rows covering ~86% of 256 buckets) the flat/bucket ratio
+    wins back. Crossover MEASURED (perturbed-copy indexes): with
+    ~500-row batches covering ~86% of 256 buckets the flat/bucket ratio
     climbs monotonically with compacted-index size — 0.32x at 2k
     kept vectors, 0.79x at 20k, 0.92x at 60k, 1.25x at 200k — so
     bucket first wins at roughly 1-2*10^5 kept vectors (~100 MB at
@@ -1193,13 +1187,12 @@ def semdedup_ingest_batch(
     dirs when little of the index is relevant. Rule: default to
     "flat" below ~10^5 kept vectors or for high-frequency small
     batches; switch to "bucket" (compact + rebuild) once the
-    compacted index passes ~10^5-10^6 vectors. Earlier bench-scale
-    numbers in BENCH_semdedup_layout_r15.json / BASELINE.md
-    round-15 notes. Exactly-once semantics are identical
-    (own-``batch_id``-partition overwrite + replay exclusion ride the
-    batch_id partition column in both layouts), and
-    :func:`compact_semdedup_index` detects the layout and folds
-    either.
+    compacted index passes ~10^5-10^6 vectors (at small indexes flat
+    cut the index write from 15.15 s to 0.66 s per batch). Exactly-once
+    semantics are identical (own-``batch_id``-partition overwrite +
+    replay exclusion ride the batch_id partition column in both
+    layouts), and :func:`compact_semdedup_index` detects the layout and
+    folds either.
 
     The corpus probe and the index write run under
     :func:`medallion._merge_lock` on the index path — the lock
@@ -1207,7 +1200,7 @@ def semdedup_ingest_batch(
     batch can never observe the compactor's between-renames window where
     the index is briefly absent (which would silently skip corpus dedup
     and admit duplicates); a compaction that crashed in that window is
-    repaired first via :func:`_recover_semdedup_swap`. A LIVE concurrent
+    repaired first via :func:`_recover_index_swap`. A LIVE concurrent
     compaction fails the batch loudly (``ConcurrentMergeError`` → the
     stream retries the batch) instead of corrupting it."""
     from realtime_data_pipeline_spark import manifest_layout as _ml
@@ -1233,14 +1226,11 @@ def semdedup_ingest_batch(
         slim = staged.select(
             F.col(id_col).alias("__id"), "__bucket", "__vec", "__norm"
         )
-        _t = time.perf_counter()
         # lazy persist, not an eager checkpoint: the id set is consumed
         # twice (both anti-joins) but always inside ONE downstream
         # action (the bucket collect / fresh checkpoint), where the
         # cache fills on first touch — the separate materializing job
-        # this stage used to run was pure scheduling overhead. Stage
-        # attribution note: in_batch_pairs now reads ~0 and its work
-        # lands in index_probe's span (documented, OPTIMIZATION_r16.md).
+        # this stage used to run was pure scheduling overhead
         in_batch_dropped = (
             _sim._similar_pairs(slim, slim, threshold)
             .filter(F.col("__id_a") < F.col("__id_b"))
@@ -1248,7 +1238,6 @@ def semdedup_ingest_batch(
             .distinct()
             .persist()
         )
-        _sem_stage("in_batch_pairs", time.perf_counter() - _t)
         batch_kept = staged.join(in_batch_dropped, id_col, "left_anti")
         kept_slim = slim.join(
             in_batch_dropped.select(F.col(id_col).alias("__id")),
@@ -1266,8 +1255,7 @@ def semdedup_ingest_batch(
         # force the cache before taking the lock (a count() on
         # in_batch_dropped here) and eat the extra job.
         with _merge_lock(index_path, op="semdedup-ingest"):
-            _t = time.perf_counter()
-            _recover_semdedup_swap(index_path)
+            _recover_index_swap(index_path)
             if os.path.exists(index_path):
                 # layout guard: writing flat batch_id= dirs into a
                 # bucket-partitioned index (or vice versa) would leave
@@ -1372,7 +1360,6 @@ def semdedup_ingest_batch(
                     )
             fresh = batch_kept.localCheckpoint(eager=True)
             in_batch_dropped.unpersist()  # fresh is checkpointed
-            _sem_stage("index_probe", time.perf_counter() - _t)
 
             def _bwrite(
                 df: DataFrame, path: str, parts: list[str]
@@ -1393,7 +1380,6 @@ def semdedup_ingest_batch(
             )
 
             def _silver_sink() -> None:
-                _t = time.perf_counter()
                 _bwrite(
                     fresh.drop("__vec", "__bucket", "__norm").unionByName(
                         null_vec
@@ -1401,10 +1387,8 @@ def semdedup_ingest_batch(
                     silver_path,
                     ["batch_id"],
                 )
-                _sem_stage("silver_write", time.perf_counter() - _t)
 
             def _index_sink() -> None:
-                _t = time.perf_counter()
                 if index_layout == "manifest":
                     # ONE gen-dir commit + one pointer swap per batch.
                     # Exactly-once under foreachBatch replay: the
@@ -1477,18 +1461,14 @@ def semdedup_ingest_batch(
                         index_path,
                         ["bucket", "batch_id"],
                     )
-                _sem_stage("index_write", time.perf_counter() - _t)
 
             # independent sink jobs over the checkpointed fresh set —
             # 2-thread pool (guide §2.6) so the big index-dir commit
-            # overlaps the silver write instead of queueing behind it.
-            # Stage spans now OVERLAP (each records its own write's
-            # wall); their sum upper-bounds the sink phase's wall.
+            # overlaps the silver write instead of queueing behind it
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=SINK_POOL_WORKERS) as pool:
                 list(pool.map(lambda f: f(), (_silver_sink, _index_sink)))
-            _sem_stage("batches", 1.0)
     finally:
         batch_df.unpersist()
 
@@ -1523,14 +1503,7 @@ def semdedup_ingest_stream(
             index_layout=index_layout,
         )
 
-    writer = (
-        df.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batch_stream(df, route, checkpoint, available_now)
 
 
 def _recover_index_swap(index_path: str) -> None:
@@ -1566,11 +1539,6 @@ def _recover_index_swap(index_path: str) -> None:
             os.replace(old, index_path)  # roll back
             if os.path.exists(tmp):
                 shutil.rmtree(tmp)
-
-
-# the semdedup-specific name the round-9 swap work introduced; kept as an
-# alias now that the recovery is shared by all three ingest indexes
-_recover_semdedup_swap = _recover_index_swap
 
 
 def _count_batch_dirs(root: str) -> int:
@@ -1667,9 +1635,9 @@ def compact_semdedup_index(spark: SparkSession, index_path: str) -> dict:
         _recover_index_swap(index_path)
         if not os.path.isdir(index_path):
             # index never created (no ingest batch yet) — a clean no-op,
-            # mirroring compact_neardup_index's per-subtree guard, so the
-            # CLI maintain path reports zero counts instead of a JVM
-            # PATH_NOT_FOUND traceback.
+            # like the other compactors, so the CLI maintain path
+            # reports zero counts instead of a JVM PATH_NOT_FOUND
+            # traceback.
             return {
                 "batch_partitions_before": 0,
                 "batch_partitions_after": 0,
@@ -1761,99 +1729,71 @@ def compact_semdedup_index(spark: SparkSession, index_path: str) -> dict:
         }
 
 
+def _compact_batch_trees(
+    spark: SparkSession, index_path: str, subtrees: list[str], op: str
+) -> dict:
+    """Fold the ``batch_id=N`` partitions of each ``subtrees`` dir under
+    ``index_path`` (``""`` = the index itself) into ``batch_id=-1``
+    under ONE hold of :func:`medallion._merge_lock` — the lock the
+    ingest probes take — repairing a crashed rename swap per subtree
+    first (:func:`_recover_index_swap`). Folded rows read as prior corpus
+    under the probes' own-partition exclusion, so a folded-batch replay
+    computes zero fresh rows and overwrites nothing. A subtree never
+    created, or holding no batch partitions yet (a first batch with no
+    fresh rows writes only ``_SUCCESS``), is a clean no-op. Returns
+    before/after batch-partition counts and the folded rows."""
+    from realtime_data_pipeline_spark.medallion import _merge_lock
+
+    index_path = os.path.normpath(index_path)
+    out = {
+        "batch_partitions_before": 0,
+        "batch_partitions_after": 0,
+        "rows": 0,
+    }
+    with _merge_lock(index_path, op=op):
+        for sub in subtrees:
+            d = os.path.normpath(os.path.join(index_path, sub))
+            _recover_index_swap(d)
+            before = _count_batch_dirs(d)
+            if not before:
+                continue
+            out["batch_partitions_before"] += before
+            out["rows"] += _fold_batch_partitions(spark, d, ["batch_id"])
+            out["batch_partitions_after"] += _count_batch_dirs(d)
+    return out
+
+
 def compact_dedup_index(spark: SparkSession, index_path: str) -> dict:
     """Maintenance for the streaming exact-dedup fingerprint index
     (:func:`dedup_ingest_batch`'s flat ``batch_id=N`` layout): fold all
     per-batch partitions into ``batch_id=-1``, bounding the probe's
     partition listing after 10⁴ batches exactly like
-    :func:`compact_semdedup_index` does for the semantic index. Same
-    lock (shared with the ingest probe), same crash-repaired rename
-    swap, same replay-safety argument: folded fingerprints read as
-    prior corpus under the own-partition exclusion, so a hypothetical
-    folded-batch replay computes zero fresh rows and overwrites
-    nothing."""
-    from realtime_data_pipeline_spark.medallion import _merge_lock
-
-    index_path = os.path.normpath(index_path)
-    with _merge_lock(index_path, op="dedup-compact"):
-        _recover_index_swap(index_path)
-        if not os.path.isdir(index_path):
-            # same clean no-op as compact_semdedup_index: absent index
-            # (no ingest batch yet) returns zero counts, no JVM error.
-            return {
-                "batch_partitions_before": 0,
-                "batch_partitions_after": 0,
-                "rows": 0,
-            }
-        before = _count_batch_dirs(index_path)
-        rows = _fold_batch_partitions(spark, index_path, ["batch_id"])
-        return {
-            "batch_partitions_before": before,
-            "batch_partitions_after": _count_batch_dirs(index_path),
-            "rows": rows,
-        }
+    :func:`compact_semdedup_index` does for the semantic index (see
+    :func:`_compact_batch_trees`)."""
+    return _compact_batch_trees(spark, index_path, [""], "dedup-compact")
 
 
 def compact_neardup_index(spark: SparkSession, index_path: str) -> dict:
     """Maintenance for the streaming near-dup MinHash index
     (:func:`neardup_ingest_batch`'s single ``sigs/`` tree,
     ``batch_id=N``-partitioned): fold its per-batch partitions into
-    ``batch_id=-1`` under the merge lock, crash-repaired like the
-    siblings (:func:`_recover_index_swap`). Band keys are derived from
-    ``sig`` at probe time, so there is nothing else to fold; a
-    ``bands/`` tree left by an older index layout is ignored. Replay
-    safety as the siblings: folded rows read as prior corpus under the
-    own-partition exclusion. A not-yet-created index is a clean
-    zero-count no-op."""
-    from realtime_data_pipeline_spark.medallion import _merge_lock
-
-    index_path = os.path.normpath(index_path)
-    sig_dir = os.path.join(index_path, "sigs")
-    with _merge_lock(index_path, op="neardup-compact"):
-        _recover_index_swap(sig_dir)
-        if not os.path.isdir(sig_dir):
-            return {
-                "batch_partitions_before": 0,
-                "batch_partitions_after": 0,
-                "rows": 0,
-            }
-        before = _count_batch_dirs(sig_dir)
-        rows = _fold_batch_partitions(spark, sig_dir, ["batch_id"])
-        return {
-            "batch_partitions_before": before,
-            "batch_partitions_after": _count_batch_dirs(sig_dir),
-            "rows": rows,
-        }
+    ``batch_id=-1`` (see :func:`_compact_batch_trees`). Band keys are
+    derived from ``sig`` at probe time, so there is nothing else to
+    fold; a ``bands/`` tree left by an older index layout is ignored."""
+    return _compact_batch_trees(
+        spark, index_path, ["sigs"], "neardup-compact"
+    )
 
 
 def compact_fuzzy_index(spark: SparkSession, index_path: str) -> dict:
     """Maintenance for the streaming fuzzy entity-resolution index
     (:func:`fuzzy_ingest_batch`'s ``vars/`` + ``keys/`` subtrees, each
     ``batch_id=N``-partitioned): fold both subtrees' per-batch
-    partitions into ``batch_id=-1`` under ONE lock hold — the
-    discipline of :func:`compact_neardup_index`, per subtree
-    (crash-repaired rename swaps; folded rows read as prior corpus under
-    the own-partition exclusion, so a folded-batch replay computes zero
-    fresh rows and overwrites nothing). A not-yet-created index is a
-    clean zero-count no-op."""
-    from realtime_data_pipeline_spark.medallion import _merge_lock
-
-    index_path = os.path.normpath(index_path)
-    var_dir = os.path.join(index_path, "vars")
-    key_dir = os.path.join(index_path, "keys")
-    with _merge_lock(index_path, op="fuzzy-compact"):
-        out = {"rows": 0}
-        before = after = 0
-        for d in (var_dir, key_dir):
-            _recover_index_swap(d)
-            if not os.path.isdir(d):
-                continue  # index half never written (e.g. all-NULL keys)
-            before += _count_batch_dirs(d)
-            out["rows"] += _fold_batch_partitions(spark, d, ["batch_id"])
-            after += _count_batch_dirs(d)
-        out["batch_partitions_before"] = before
-        out["batch_partitions_after"] = after
-        return out
+    partitions into ``batch_id=-1`` under one lock hold (see
+    :func:`_compact_batch_trees`)."""
+    return _compact_batch_trees(
+        spark, index_path, ["vars", "keys"], "fuzzy-compact"
+    )
 
 
 def dq_gated_stream(
@@ -1886,14 +1826,7 @@ def dq_gated_stream(
             batch_df, batch_id, rules, silver_path, quarantine_path, curate
         )
 
-    writer = (
-        df.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batch_stream(df, route, checkpoint, available_now)
 
 
 class MetricsLogger:
@@ -1990,14 +1923,7 @@ def upsert_stream(
             partition_col=partition_col,
         )
 
-    writer = (
-        df.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batch_stream(df, merge_batch, checkpoint, available_now)
 
 
 def erasure_stream(
@@ -2042,14 +1968,9 @@ def erasure_stream(
             max_retries=max_retries,
         )
 
-    writer = (
-        requests.writeStream.foreachBatch(erase_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _start_batch_stream(
+        requests, erase_batch, checkpoint, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def scd2_stream(
@@ -2089,14 +2010,7 @@ def scd2_stream(
             n_buckets=n_buckets,
         )
 
-    writer = (
-        df.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batch_stream(df, merge_batch, checkpoint, available_now)
 
 
 def temporal_enrich_stream(
@@ -2155,12 +2069,9 @@ def temporal_enrich_stream(
         finally:
             batch_df.unpersist()
 
-    writer = df.writeStream.foreachBatch(enrich).option(
-        "checkpointLocation", checkpoint
+    return _start_batch_stream(
+        df, enrich, checkpoint, available_now, output_mode="append"
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def rollup_batch_writer(
@@ -2325,19 +2236,11 @@ def continuous_rollup(
     into a single ``batch_id=-1`` partition during a quiet window (same
     merge expressions as the view) so the merge-on-read stays bounded.
     """
-    writer = (
-        df.writeStream.foreachBatch(
-            rollup_batch_writer(
-                out_path, ts_col, window_duration, value_col,
-                distinct_col=distinct_col, histogram=histogram,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    write_partials = rollup_batch_writer(
+        out_path, ts_col, window_duration, value_col,
+        distinct_col=distinct_col, histogram=histogram,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batch_stream(df, write_partials, checkpoint, available_now)
 
 
 def _hist_quantile_from_entries(entries, lo, hi, nbins, q):

@@ -71,17 +71,6 @@ def test_entry_runs_flagship(spark):
     assert len(df.schema.fields) > 0
 
 
-def test_bench_legs_resolve_in_registries():
-    """Every bench HEADLINE / RAMP leg must exist in the declared or
-    shelved registry — a rename that orphans a bench leg should fail CI,
-    not the driver's bench run."""
-    import bench
-    from realtime_data_pipeline_spark import queries as q
-
-    for name in [*bench.HEADLINE, *bench.RAMP_LEGS]:
-        assert name in q.QUERIES or name in q.SHELVED_QUERIES, name
-
-
 def test_shelved_oracle_keys_are_shelved_queries():
     """SHELVED_ORACLE_SQL must only name shelved queries (and declared
     ORACLE_SQL only declared ones) — a key drifting between tiers would

@@ -858,10 +858,10 @@ def test_no_pickled_local_relation_writes_in_package_source():
     """Source lint against the round-12 regression class: a
     ``createDataFrame([...tuples...])`` local relation is a pickled
     Python RDD, and WRITING it runs a Python worker stage costing ~5s
-    per write on a warm local[32] session (BENCH_ivf_isolate_r12.json —
-    the r11 ivf_index_rebuild 2x regression was exactly one such 1-row
-    write). Driver-side constants must lift through pandas/Arrow
-    (`similarity._write_local`) or JVM-native range/lit. Allowed
+    per write on a warm local[32] session (the r11 ivf_index_rebuild
+    2x regression was exactly one such 1-row write). Driver-side
+    constants must lift through pandas/Arrow (`similarity._write_local`)
+    or JVM-native range/lit. Allowed
     spellings: empty-frame schema stubs (no rows to pickle) and the BFS
     seed (one row, materialized once into a localCheckpoint, never
     re-evaluated per iteration)."""

@@ -1465,6 +1465,56 @@ def test_semdedup_empty_first_batch_does_not_pin_layout(
         )
 
 
+def test_exact_and_fuzzy_ingest_survive_empty_first_batch(spark, tmp_path):
+    """A first micro-batch with nothing to index (all-NULL content for
+    exact dedup, all-NULL keys for fuzzy) passes its rows to silver and
+    leaves the index dirs holding only _SUCCESS. Every later batch must
+    probe that as an empty index — not die inferring a schema from it,
+    which a stream would retry forever."""
+    import os
+
+    def silver_ids(path, col):
+        return {r[col] for r in spark.read.parquet(path).collect()}
+
+    def no_batch_dirs(path):
+        return os.path.isdir(path) and not any(
+            e.startswith("batch_id=") for e in os.listdir(path)
+        )
+
+    schema = "doc_id long, content string"
+    fp_index = str(tmp_path / "fp_index")
+    fp_silver = str(tmp_path / "fp_silver")
+    for bid, rows in enumerate([
+        [(1, None)],
+        [(2, "alpha"), (3, "alpha"), (4, "beta")],
+        [(5, "alpha"), (6, "gamma")],
+    ]):
+        streaming.dedup_ingest_batch(
+            spark.createDataFrame(rows, schema), bid, fp_index, fp_silver,
+            "content", "doc_id",
+        )
+        if bid == 0:
+            assert no_batch_dirs(fp_index)
+    assert silver_ids(fp_silver, "doc_id") == {1, 2, 4, 6}
+
+    schema = "id long, name string"
+    fz_index = str(tmp_path / "fz_index")
+    fz_silver = str(tmp_path / "fz_silver")
+    for bid, rows in enumerate([
+        [(1, None)],
+        [(2, "acme ltd"), (3, "acme ltd."), (4, "zeta co")],
+        [(5, "acme ltdx"), (6, "omega inc")],
+    ]):
+        streaming.fuzzy_ingest_batch(
+            spark.createDataFrame(rows, schema), bid, fz_index, fz_silver,
+            "id", "name", max_dist=1,
+        )
+        if bid == 0:
+            assert no_batch_dirs(f"{fz_index}/vars")
+            assert no_batch_dirs(f"{fz_index}/keys")
+    assert silver_ids(fz_silver, "id") == {1, 2, 4, 6}
+
+
 @pytest.mark.slow
 def test_rollup_histogram_quantiles_merge_exactly(spark, tmp_path):
     """Incremental approx quantiles: per-batch fixed-bin histogram map
@@ -1638,7 +1688,7 @@ def test_semdedup_compaction_crash_window_is_repaired_and_locked(
     index as absent and skipped corpus dedup — silently admitting
     duplicates. Now (a) the swap and the ingest probe share
     medallion._merge_lock so the window is unobservable, and (b)
-    _recover_semdedup_swap repairs a crashed swap — roll FORWARD when
+    _recover_index_swap repairs a crashed swap — roll FORWARD when
     the compacted tmp is complete (_SUCCESS), roll BACK otherwise —
     before the next ingest batch probes."""
     import os
@@ -1686,7 +1736,7 @@ def test_semdedup_compaction_crash_window_is_repaired_and_locked(
     if os.path.exists(os.path.join(tmp, "_SUCCESS")):
         os.remove(os.path.join(tmp, "_SUCCESS"))
     os.replace(idx, old)
-    streaming._recover_semdedup_swap(idx)
+    streaming._recover_index_swap(idx)
     assert idx_ids() == ids0 and not os.path.exists(tmp)
 
     # a LIVE concurrent compaction makes the batch fail loudly instead
@@ -1971,17 +2021,27 @@ def test_compact_absent_index_is_clean_noop(spark, tmp_path):
     """Round-9 ADVICE regression: `maintain --compact-stream-index` on
     an index path that no ingest batch has created yet must return zero
     counts (like compact_neardup_index always did) instead of dying with
-    a raw Spark PATH_NOT_FOUND AnalysisException."""
-    for fn in (
-        streaming.compact_dedup_index,
-        streaming.compact_semdedup_index,
-        streaming.compact_neardup_index,
-        streaming.compact_fuzzy_index,
+    a raw Spark PATH_NOT_FOUND AnalysisException — and so must an index
+    whose trees exist but hold no batch partitions yet."""
+    import os
+
+    # second input: the index trees exist but hold only _SUCCESS — what
+    # a first ingest batch with no fresh rows leaves behind
+    for fn, subtrees in (
+        (streaming.compact_dedup_index, [""]),
+        (streaming.compact_semdedup_index, [""]),
+        (streaming.compact_neardup_index, ["sigs"]),
+        (streaming.compact_fuzzy_index, ["vars", "keys"]),
     ):
-        m = fn(spark, str(tmp_path / "never_created"))
-        assert m["batch_partitions_before"] == 0
-        assert m["batch_partitions_after"] == 0
-        assert m["rows"] == 0
+        empty = str(tmp_path / f"empty_{fn.__name__}")
+        for sub in subtrees:
+            os.makedirs(os.path.join(empty, sub))
+            open(os.path.join(empty, sub, "_SUCCESS"), "w").close()
+        for path in (str(tmp_path / "never_created"), empty):
+            m = fn(spark, path)
+            assert m["batch_partitions_before"] == 0
+            assert m["batch_partitions_after"] == 0
+            assert m["rows"] == 0
 
 
 @pytest.mark.slow
