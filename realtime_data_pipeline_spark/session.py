@@ -11,6 +11,8 @@ into a parameterized builder with scale-ready defaults:
 * Session timezone pinned to UTC so timestamp semantics are stable across
   engines (required for the DuckDB oracle parity checks).
 * Arrow enabled for any pandas interchange (vectorized UDF path).
+* Partition directories are always listed on the driver, never by a
+  Spark job (see :func:`get_spark`).
 """
 
 from __future__ import annotations
@@ -65,6 +67,16 @@ def get_spark(
     defaults to RocksDB (disk-backed, bounded-heap) — the 100 TB posture
     for stateful streaming; pass 'hdfs' for the Spark default in-heap
     provider.
+
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` is raised
+    to the int maximum, so reading a root with more than 32 partition
+    dirs (a month of date partitions, a growing ``batch_id=`` index)
+    lists them on the driver instead of launching a listing job. The
+    master is ``local[N]``, so that job's tasks only ever ran in the
+    same JVM; dropping it took a one-day read of a 37-partition zone
+    from 0.418 to 0.203 s on 4 vCPU. A cluster deployment that lists
+    object-store prefixes from many executors restores Spark's default
+    (32) through ``extra_conf``.
     """
     if state_store not in STATE_STORE_PROVIDERS:
         raise ValueError(
@@ -84,6 +96,11 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", max_partition_bytes)
         .config("spark.sql.caseSensitive", "false")
+        # never list partition dirs with a Spark job (see docstring)
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(2**31 - 1),
+        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # lets custom Python data sources (pysource.py) receive

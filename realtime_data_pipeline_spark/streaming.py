@@ -2061,8 +2061,6 @@ def temporal_enrich_stream(
             # bucket -> gen pointers (no partition-tree listing at
             # all), hive tables keep the isin partition filter
             dim = medallion.scd2_read(spark, dim_path, buckets=affected)
-            if dim is None:  # no stored history for these buckets yet
-                dim = medallion.scd2_read(spark, dim_path).limit(0)
             medallion.scd2_temporal_join(
                 batch_df, dim, keys, ts_col, how=how
             ).write.mode("append").parquet(out_path)

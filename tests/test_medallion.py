@@ -158,7 +158,10 @@ def test_compact_shrinks_file_count(spark, sf_dir, tmp_path):
         "status", F.col("o_orderstatus")
     )
     # simulate streaming sprawl: 20 files per partition
-    orders.repartition(20).write.partitionBy("status").parquet(path)
+    medallion.write_parquet(orders.repartition(20), path, partition_by="status")
+    record = os.path.join(path, medallion.ZONE_SCHEMA_FILE)
+    with open(record) as f:
+        schema_before = f.read()
     n_before = sum(1 for p in __import__("pathlib").Path(path).rglob("*.parquet"))
     assert n_before >= 30
 
@@ -169,6 +172,21 @@ def test_compact_shrinks_file_count(spark, sf_dir, tmp_path):
     assert metrics["rows"] == orders.count()
     assert out.count() == orders.count()
     assert "status" in out.columns  # hive layout preserved
+    # the schema record survives the swap and still describes the zone
+    with open(record) as f:
+        assert f.read() == schema_before
+    assert medallion.read_zone(spark, path).schema == out.schema
+
+
+def test_compact_refuses_while_a_merge_holds_the_lock(spark, tmp_path):
+    """compact takes the table's merge lock: racing a locked merge it
+    raises instead of swapping the merge's fresh files away."""
+    path = str(tmp_path / "locked")
+    medallion.write_parquet(spark.range(10), path)
+    with medallion._merge_lock(path):
+        with pytest.raises(medallion.ConcurrentMergeError):
+            medallion.compact(spark, path)
+    assert medallion.compact(spark, path)["rows"] == 10
 
 
 def _part_files(root, part):
@@ -581,3 +599,118 @@ def test_merge_upsert_pure_insert_into_new_partition_dirs(spark, tmp_path):
     # directory names back as DATE regardless of merge path
     got = {(r.id, r.v, str(r.d)) for r in spark.read.parquet(tgt).collect()}
     assert got == {(1, "a", "2024-01-01"), (9, "z", "2024-02-02")}
+
+
+def _spark_jobs(spark, fn) -> int:
+    """Spark jobs started by ``fn``, counted under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+N_DATES = 40  # past Spark's 32-path parallel-listing threshold
+
+
+@pytest.fixture(scope="module")
+def date_zones(spark, tmp_path_factory):
+    """raw -> bronze -> silver over N_DATES date partitions, with the
+    Spark jobs each step ran."""
+    import datetime as dt
+
+    root = str(tmp_path_factory.mktemp("date_zones"))
+    rows = [
+        (dt.datetime(2024, 1, 1, h) + dt.timedelta(days=d), 10.0 + h,
+         None if (d, h) == (3, 2) else 1, f" n{d} ", "x")
+        for d in range(N_DATES)
+        for h in range(3)
+    ]
+    spark.createDataFrame(
+        rows,
+        "`Pickup Datetime` timestamp, `Fare Amount` double, `Vendor ID` int, "
+        "note string, `_tmp_scratch` string",
+    ).repartition(4).write.parquet(f"{root}/raw")
+    z = medallion.Zones(root)
+    medallion.run_bronze(
+        spark, z.raw, z.bronze, "pickup_datetime",
+        ["fare_amount", "vendor_id", "note", "_tmp_scratch"],
+        date_col="pickup_date",
+    )
+    silver_jobs = _spark_jobs(spark, lambda: medallion.run_silver(
+        spark, z.bronze, z.silver, z.quarantine, rules(), warn_only=True,
+        partition_by="pickup_date",
+    ))
+    return z, silver_jobs
+
+
+def test_zone_jobs_run_no_listing_or_inference_job(spark, date_zones):
+    """Driver-side listing plus the schema record leave only the query's
+    own jobs: run_silver runs its two writes, a filtered aggregate through
+    read_zone its own (at most two) jobs, and the rebalanced bronze write
+    makes one file per date."""
+    z, silver_jobs = date_zones
+    assert silver_jobs <= 2
+    day = F.lit("2024-01-05").cast("date")
+    read_jobs = _spark_jobs(spark, lambda: medallion.read_zone(spark, z.silver)
+                            .filter(F.col("pickup_date") == day)
+                            .agg(F.count(F.lit(1)), F.sum("fare_amount"))
+                            .collect())
+    assert read_jobs <= 2
+    dates = [d for d in os.listdir(z.bronze) if d.startswith("pickup_date=")]
+    assert len(dates) == N_DATES
+    for d in dates:
+        files = os.listdir(os.path.join(z.bronze, d))
+        assert sum(f.endswith(".parquet") for f in files) == 1, d
+
+
+def test_zone_schema_record_matches_plain_reads(spark, date_zones):
+    """read_zone with the record returns what a footer-inferring read
+    returns (names, types, order, rows), prunes partitions, and neither
+    a plain Spark read nor a DuckDB parquet glob sees the record."""
+    import duckdb
+
+    z, _ = date_zones
+    for path in (z.bronze, z.silver, z.quarantine):
+        assert os.path.isfile(os.path.join(path, medallion.ZONE_SCHEMA_FILE))
+        got, plain = medallion.read_zone(spark, path), spark.read.parquet(path)
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in plain.schema
+        ]
+        assert sorted(map(str, got.collect())) == sorted(map(str, plain.collect()))
+        assert not any(f.endswith(".json") for f in plain.inputFiles())
+        glob = os.path.join(path, "**", "*.parquet")
+        files = duckdb.sql(f"SELECT file FROM glob('{glob}')").fetchall()
+        assert files and not any(f.endswith(".json") for (f,) in files)
+        n = duckdb.sql(f"SELECT count(*) FROM read_parquet('{glob}')").fetchone()[0]
+        assert n == plain.count()
+    pruned = medallion.read_zone(spark, z.silver).filter(
+        F.col("pickup_date") == F.lit("2024-01-05").cast("date")
+    )
+    pf = next(s for s in pruned._jdf.queryExecution().executedPlan().toString()
+              .splitlines() if "PartitionFilters" in s)
+    assert "pickup_date" in pf
+
+
+def test_zone_schema_and_merge_schema_win_over_the_record(spark, tmp_path):
+    """An explicit schema= or merge_schema=True overrides the record, e.g.
+    when a writer that keeps no record appended an evolved file."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    path = str(tmp_path / "zone")
+    medallion.write_parquet(spark.range(4), path)
+    spark.range(4, 6).withColumn("extra", F.lit("e")).write.mode(
+        "append"
+    ).parquet(path)  # plain Spark: the record is left as it was
+    assert medallion.read_zone(spark, path).columns == ["id"]
+    merged = medallion.read_zone(spark, path, merge_schema=True)
+    assert merged.columns == ["id", "extra"]
+    assert merged.filter(F.col("extra").isNotNull()).count() == 2
+    only = StructType([StructField("extra", StringType())])
+    assert medallion.read_zone(spark, path, schema=only).columns == ["extra"]

@@ -888,6 +888,14 @@ def test_manifest_orphan_generation_is_invisible(spark, tmp_path):
     # the orphan's rows are invisible
     rows = {r["tier"] for r in medallion.scd2_read(spark, tgt).collect()}
     assert rows == {"bronze"}
+    # buckets with no stored history read as an empty frame, not None
+    from realtime_data_pipeline_spark import manifest_layout as ml
+
+    empty = [b for b in range(4) if b not in ml.read_manifest(data)]
+    assert empty
+    none_stored = medallion.scd2_read(spark, tgt, buckets=empty)
+    assert none_stored.count() == 0
+    assert none_stored.schema == medallion.scd2_read(spark, tgt).schema
     # and the next merge does not reuse gen=5
     medallion.scd2_merge(
         spark,

@@ -58,10 +58,17 @@ def test_zone_merge_schema_reads_evolved_columns(spark, sample, tmp_path):
     """A zone written over time accretes columns; merge_schema must
     surface the union of footer schemas (new column NULL for old files)
     where the default single-footer read may silently drop it."""
+    import os
+
     out = str(tmp_path / "zone_evolved")
+    record = os.path.join(out, medallion.ZONE_SCHEMA_FILE)
     medallion.write_zone(sample, out, fmt="parquet", mode="overwrite")
+    assert os.path.isfile(record)
     evolved = sample.withColumn("quality_score", F.lit(0.5))
     medallion.write_zone(evolved, out, fmt="parquet", mode="append")
+    # the append changed the schema: its record is gone, so a read
+    # without merge_schema falls back to footer inference
+    assert not os.path.exists(record)
 
     back = medallion.read_zone(spark, out, merge_schema=True)
     assert "quality_score" in back.columns
