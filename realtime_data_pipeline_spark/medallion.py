@@ -14,8 +14,8 @@ Write posture for 100 TB:
 * rebalance by the partition column at the bronze boundary only
   (:func:`run_bronze`): one file per date instead of one per date per
   task, and silver inherits the clustering from its bronze scan. A
-  rebalance in every partitioned write was measured and rejected (the
-  extra shuffle cost silver 0.4 s of 1.4 s);
+  rebalance in every partitioned write was measured and rejected: its
+  extra shuffles took a 200k-row silver job from 0.66 to 0.81–0.84 s;
 * every parquet write records the frame's schema beside the data
   (``_schema.json``, see :func:`write_parquet`), so :func:`read_zone`
   plans a read without a footer schema-inference job. The record is a
@@ -148,7 +148,11 @@ def _commit_schema_record(
     if ``df`` matches it, so an evolving append or dynamic overwrite
     sends the next read back to footer inference. Published through a
     tmp file + ``os.replace`` (readers see the old or the new record,
-    never a torn one), as ``manifest_layout.publish`` does."""
+    never a torn one), as ``manifest_layout.publish`` does. Like the
+    merge lock, the record lives on the local filesystem: a root that is
+    not a local directory (a URI) gets none."""
+    if not os.path.isdir(path):
+        return
     rec = _zone_schema(df, partition_cols)
     target = os.path.join(path, ZONE_SCHEMA_FILE)
     if replaced:
@@ -228,9 +232,11 @@ def read_zone(
     Spark then plans the read without its footer schema-inference job.
     With the session's driver-side partition listing
     (:func:`session.get_spark`), a filtered aggregate over the zone runs
-    only its own Spark jobs; on 4 vCPU a one-day read of a 37-partition
-    zone went from 0.418 s (listing job + inference job) to 0.126 s.
-    Without a record the read infers from a footer, as before.
+    only its own Spark jobs. On 4 vCPU a one-day read of a 37-partition
+    zone went from 0.186 s (listing job + inference job) to 0.048 s; a
+    reused file index, the most a file-list manifest could give, reads
+    it in 0.039 s. Without a record the read infers from a footer, as
+    before.
 
     Two operational flags a long-lived 100 TB zone eventually needs:
 
@@ -484,8 +490,6 @@ def _compact_locked(
 
     meta_p = os.path.join(path, _SCD2_META_FILE)
     if os.path.isfile(meta_p):
-        import json
-
         with open(meta_p) as f:
             if json.load(f).get("layout") == "manifest":
                 # manifest-layout SCD2 table: a flat-root rewrite would
@@ -1556,8 +1560,9 @@ def run_bronze(
     writing every date made 148), and every later scan of bronze
     (:func:`run_silver`) inherits the clustering. Unlike
     ``repartition(date_col)``, AQE splits a skewed day across tasks. On
-    4 vCPU it took a 200k-row job from 1.33 s to 0.80–0.88 s, and the
-    silver job after it from 2.47 s to 1.37–1.47 s."""
+    a 200k-row month (4 vCPU) this job went from 0.76 to 0.51 s; the
+    silver job after it went from 1.41 to 0.78 s, a figure that also
+    counts the two metadata jobs :func:`run_silver` no longer runs."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
@@ -1612,8 +1617,8 @@ def run_silver(
     and driver-side listing the job runs exactly its two write jobs.
     Both writes keep bronze's date clustering (:func:`run_bronze`).
     Persisting bronze to make the two scans one was measured and
-    rejected: 1.51 s vs 1.47 s per 200k-row job on 4 vCPU, no gain, and
-    a cached bronze at 100 TB is a memory hazard."""
+    rejected: 0.67–0.74 s vs 0.66 s per 200k-row job on 4 vCPU, no
+    gain, and a cached bronze at 100 TB is a memory hazard."""
     from pyspark.sql import Observation
 
     bronze = read_zone(spark, bronze_path)

@@ -74,7 +74,7 @@ def get_spark(
     lists them on the driver instead of launching a listing job. The
     master is ``local[N]``, so that job's tasks only ever ran in the
     same JVM; dropping it took a one-day read of a 37-partition zone
-    from 0.418 to 0.203 s on 4 vCPU. A cluster deployment that lists
+    from 0.186 to 0.080 s on 4 vCPU. A cluster deployment that lists
     object-store prefixes from many executors restores Spark's default
     (32) through ``extra_conf``.
     """

@@ -15,6 +15,7 @@ from realtime_data_pipeline_spark.etl import (
     normalize_columns,
     trim_strings,
 )
+from tests.test_plans import plan_str
 
 
 @pytest.fixture(scope="module")
@@ -621,8 +622,8 @@ N_DATES = 40  # past Spark's 32-path parallel-listing threshold
 
 @pytest.fixture(scope="module")
 def date_zones(spark, tmp_path_factory):
-    """raw -> bronze -> silver over N_DATES date partitions, with the
-    Spark jobs each step ran."""
+    """raw -> bronze -> silver over N_DATES date partitions, and the
+    number of Spark jobs run_silver ran."""
     import datetime as dt
 
     root = str(tmp_path_factory.mktemp("date_zones"))
@@ -693,8 +694,7 @@ def test_zone_schema_record_matches_plain_reads(spark, date_zones):
     pruned = medallion.read_zone(spark, z.silver).filter(
         F.col("pickup_date") == F.lit("2024-01-05").cast("date")
     )
-    pf = next(s for s in pruned._jdf.queryExecution().executedPlan().toString()
-              .splitlines() if "PartitionFilters" in s)
+    pf = next(s for s in plan_str(pruned).splitlines() if "PartitionFilters" in s)
     assert "pickup_date" in pf
 
 
