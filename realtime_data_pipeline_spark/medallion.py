@@ -16,7 +16,7 @@ Write posture for 100 TB:
   task, and silver inherits the clustering from its bronze scan. A
   rebalance in every partitioned write was measured and rejected: its
   extra shuffles took a 200k-row silver job from 0.66 to 0.81–0.84 s;
-* every parquet write records the frame's schema beside the data
+* every parquet write records the frame's data columns beside the data
   (``_schema.json``, see :func:`write_parquet`), so :func:`read_zone`
   plans a read without a footer schema-inference job. The record is a
   ``_``-prefixed non-parquet file: Spark's file listing and a
@@ -87,13 +87,16 @@ def write_parquet(
     in :func:`replay_quarantine`, where a partition whose rows all
     promoted must not survive the rewrite).
 
-    After the data commit the frame's schema is recorded beside the data
-    as ``_schema.json``: data columns first, then partition columns, all
-    nullable — the schema a hive read of the zone reports. A write that
+    The frame's data columns (partition columns left out, all nullable)
+    are recorded beside the data as ``_schema.json``. A write that
     defines the whole root (a fresh root, or an overwrite that truncates
-    it: static, or unpartitioned) publishes it; an append or dynamic
-    overwrite whose schema differs from the record deletes it, so reads
-    fall back to footer inference. :func:`read_zone` plans from it."""
+    it: static, or unpartitioned) publishes the record after its data
+    commit. An append or dynamic overwrite whose columns differ from the
+    record deletes it BEFORE writing, so a crash mid-write never leaves
+    a record that hides the new columns: reads fall back to footer
+    inference. :func:`read_zone` plans from the record; Spark types the
+    partition columns from the directory names, as it does without
+    one."""
     write_zone(
         df, path, "parquet", mode, partition_by, max_records_per_file,
         partition_overwrite,
@@ -119,13 +122,13 @@ def _nullable(node):
 
 
 def _zone_schema(df: DataFrame, partition_cols: list[str]) -> dict:
-    """The schema a hive read of ``df``'s write reports: data columns in
-    frame order, then the partition columns in layout order, all
-    nullable."""
-    by_name = {f.name.lower(): f for f in df.schema.fields}
-    parts = [by_name[c.lower()] for c in partition_cols]
-    data = [f for f in df.schema.fields if f not in parts]
-    return _nullable(StructType(data + parts).jsonValue())
+    """The data columns of ``df``'s write in frame order, all nullable.
+    Partition columns stay out: a read types them from the directory
+    names, exactly as a read without a record does."""
+    parts = {c.lower() for c in partition_cols}
+    return _nullable(
+        StructType([f for f in df.schema if f.name.lower() not in parts]).jsonValue()
+    )
 
 
 def _read_schema_record(path: str) -> dict | None:
@@ -136,32 +139,33 @@ def _read_schema_record(path: str) -> dict | None:
         return None
 
 
-def _commit_schema_record(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    replaced: bool,
-) -> None:
-    """After a parquet write's data commit: publish ``df``'s schema as
-    the zone's record when the write defined the whole root (fresh root,
-    or an overwrite that truncated it); otherwise keep the record only
-    if ``df`` matches it, so an evolving append or dynamic overwrite
-    sends the next read back to footer inference. Published through a
-    tmp file + ``os.replace`` (readers see the old or the new record,
-    never a torn one), as ``manifest_layout.publish`` does. Like the
-    merge lock, the record lives on the local filesystem: a root that is
-    not a local directory (a URI) gets none."""
+def _drop_stale_schema_record(path: str, rec: dict, replaced: bool) -> None:
+    """Before a parquet write into an existing root: delete the record
+    if the write truncates the root or adds files whose columns differ
+    from it. Deleting early is always safe (reads fall back to footer
+    inference); deleting after the commit would leave a window, or
+    after a crash a permanent stale record, that plans the new files
+    with the old columns."""
+    if replaced or _read_schema_record(path) not in (None, rec):
+        try:
+            os.remove(os.path.join(path, ZONE_SCHEMA_FILE))
+        except (FileNotFoundError, NotADirectoryError):
+            pass
+
+
+def _publish_schema_record(path: str, rec: dict) -> None:
+    """After the data commit of a write that defined the whole root.
+    Published through a tmp file + ``os.replace`` (readers see the old
+    or the new record, never a torn one), as ``manifest_layout.publish``
+    does. Like the merge lock, the record lives on the local filesystem:
+    a root that is not a local directory (a URI) gets none."""
     if not os.path.isdir(path):
         return
-    rec = _zone_schema(df, partition_cols)
     target = os.path.join(path, ZONE_SCHEMA_FILE)
-    if replaced:
-        tmp = target + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(rec, f)
-        os.replace(tmp, target)
-    elif _read_schema_record(path) not in (None, rec):
-        os.remove(target)
+    tmp = target + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(rec, f)
+    os.replace(tmp, target)
 
 
 def write_zone(
@@ -202,14 +206,21 @@ def write_zone(
     if cols:
         writer = writer.partitionBy(*cols)
     fresh = not os.path.exists(path)
-    writer.save(path)
-    if fmt == "parquet" and (fresh or mode != "ignore"):
-        # Spark truncates the root on an overwrite that is static, or
-        # dynamic without partition columns
+    # an existing root only takes files under append or overwrite; Spark
+    # truncates it on an overwrite that is static, or dynamic without
+    # partition columns
+    m = mode.lower()
+    rec = replaced = None
+    if fmt == "parquet" and (fresh or m in ("append", "overwrite")):
+        rec = _zone_schema(df, cols)
         replaced = fresh or (
-            mode == "overwrite" and (partition_overwrite == "static" or not cols)
+            m == "overwrite" and (partition_overwrite == "static" or not cols)
         )
-        _commit_schema_record(df, path, cols, replaced)
+        if not fresh:
+            _drop_stale_schema_record(path, rec, replaced)
+    writer.save(path)
+    if replaced:
+        _publish_schema_record(path, rec)
 
 
 def read_zone(
@@ -229,8 +240,10 @@ def read_zone(
     see :func:`write_parquet`) is read with that record when the caller
     passes neither ``schema`` nor ``merge_schema`` nor reader options
     (which can change the files and partition columns a read sees):
-    Spark then plans the read without its footer schema-inference job.
-    With the session's driver-side partition listing
+    Spark then plans the read without its footer schema-inference job,
+    and still types the partition columns from the directory names, so
+    the read reports what a read without the record reports. With the
+    session's driver-side partition listing
     (:func:`session.get_spark`), a filtered aggregate over the zone runs
     only its own Spark jobs. On 4 vCPU a one-day read of a 37-partition
     zone went from 0.186 s (listing job + inference job) to 0.048 s; a

@@ -151,32 +151,47 @@ def test_save_mode_append_vs_overwrite(spark, raw_path, tmp_path):
 
 def test_compact_shrinks_file_count(spark, sf_dir, tmp_path):
     """Maintenance compaction: many small files -> few right-sized ones,
-    same rows, hive partition layout preserved."""
-    from realtime_data_pipeline_spark import medallion
+    same rows, hive partition layout preserved. A sprawl written by plain
+    Spark (no schema record, as a streaming sink leaves it) comes out
+    with a record; a recorded sprawl keeps its record unchanged."""
+    import pathlib
 
-    path = str(tmp_path / "sprawl")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").withColumn(
         "status", F.col("o_orderstatus")
     )
-    # simulate streaming sprawl: 20 files per partition
-    medallion.write_parquet(orders.repartition(20), path, partition_by="status")
-    record = os.path.join(path, medallion.ZONE_SCHEMA_FILE)
-    with open(record) as f:
-        schema_before = f.read()
-    n_before = sum(1 for p in __import__("pathlib").Path(path).rglob("*.parquet"))
-    assert n_before >= 30
+    for writer in ("spark", "write_parquet"):
+        path = str(tmp_path / f"sprawl_{writer}")
+        # simulate streaming sprawl: 20 files per partition
+        if writer == "spark":
+            orders.repartition(20).write.partitionBy("status").parquet(path)
+        else:
+            medallion.write_parquet(
+                orders.repartition(20), path, partition_by="status"
+            )
+        record = os.path.join(path, medallion.ZONE_SCHEMA_FILE)
+        schema_before = medallion._read_schema_record(path)
+        assert (schema_before is None) == (writer == "spark"), writer
+        n_before = sum(1 for p in pathlib.Path(path).rglob("*.parquet"))
+        assert n_before >= 30
+        parts_before = sorted(d for d in os.listdir(path) if "=" in d)
+        plain_before = spark.read.parquet(path)
+        rows_before = sorted(map(str, plain_before.collect()))
 
-    metrics = medallion.compact(spark, path, partition_by="status")
-    assert metrics["files_before"] == n_before
-    assert metrics["files_after"] < n_before / 3
-    out = spark.read.parquet(path)
-    assert metrics["rows"] == orders.count()
-    assert out.count() == orders.count()
-    assert "status" in out.columns  # hive layout preserved
-    # the schema record survives the swap and still describes the zone
-    with open(record) as f:
-        assert f.read() == schema_before
-    assert medallion.read_zone(spark, path).schema == out.schema
+        metrics = medallion.compact(spark, path, partition_by="status")
+        assert metrics["files_before"] == n_before
+        assert metrics["files_after"] < n_before / 3
+        out = spark.read.parquet(path)
+        assert metrics["rows"] == orders.count()
+        # hive layout, schema and rows preserved
+        assert sorted(d for d in os.listdir(path) if "=" in d) == parts_before
+        assert out.schema == plain_before.schema
+        assert sorted(map(str, out.collect())) == rows_before
+        # the rewrite's record describes the zone: the old one unchanged,
+        # or a fresh one for a sprawl that had none
+        assert os.path.isfile(record), writer
+        if schema_before is not None:
+            assert medallion._read_schema_record(path) == schema_before
+        assert medallion.read_zone(spark, path).schema == out.schema
 
 
 def test_compact_refuses_while_a_merge_holds_the_lock(spark, tmp_path):
@@ -671,14 +686,25 @@ def test_zone_jobs_run_no_listing_or_inference_job(spark, date_zones):
         assert sum(f.endswith(".parquet") for f in files) == 1, d
 
 
-def test_zone_schema_record_matches_plain_reads(spark, date_zones):
+def test_zone_schema_record_matches_plain_reads(spark, date_zones, tmp_path):
     """read_zone with the record returns what a footer-inferring read
     returns (names, types, order, rows), prunes partitions, and neither
-    a plain Spark read nor a DuckDB parquet glob sees the record."""
+    a plain Spark read nor a DuckDB parquet glob sees the record. That
+    holds for partition columns whose frame type differs from the type
+    Spark infers from the directory names: a 'yyyy-MM-dd' string, a
+    long holding small values, a numeric-looking string."""
     import duckdb
 
     z, _ = date_zones
-    for path in (z.bronze, z.silver, z.quarantine):
+    frame = spark.createDataFrame(
+        [(i, f"2024-01-0{i % 3 + 1}", i % 2, f"00{i % 3}") for i in range(6)],
+        "v int, day string, n long, code string",
+    )
+    typed = []
+    for col in ("day", "n", "code"):
+        typed.append(str(tmp_path / col))
+        medallion.write_parquet(frame, typed[-1], partition_by=col)
+    for path in (z.bronze, z.silver, z.quarantine, *typed):
         assert os.path.isfile(os.path.join(path, medallion.ZONE_SCHEMA_FILE))
         got, plain = medallion.read_zone(spark, path), spark.read.parquet(path)
         assert [(f.name, f.dataType) for f in got.schema] == [

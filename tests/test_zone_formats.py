@@ -64,10 +64,17 @@ def test_zone_merge_schema_reads_evolved_columns(spark, sample, tmp_path):
     record = os.path.join(out, medallion.ZONE_SCHEMA_FILE)
     medallion.write_zone(sample, out, fmt="parquet", mode="overwrite")
     assert os.path.isfile(record)
-    evolved = sample.withColumn("quality_score", F.lit(0.5))
+    # record_seen: whether the record still existed while the append's
+    # data job ran
+    seen = F.udf(lambda _: os.path.exists(record), "boolean")
+    evolved = sample.withColumn("quality_score", F.lit(0.5)).withColumn(
+        "record_seen", seen("n_nationkey")
+    )
     medallion.write_zone(evolved, out, fmt="parquet", mode="append")
     # the append changed the schema: its record is gone, so a read
-    # without merge_schema falls back to footer inference
+    # without merge_schema falls back to footer inference. It went
+    # before the new files were written, so no reader (or crash) ever
+    # pairs the new files with the old record
     assert not os.path.exists(record)
 
     back = medallion.read_zone(spark, out, merge_schema=True)
@@ -75,6 +82,7 @@ def test_zone_merge_schema_reads_evolved_columns(spark, sample, tmp_path):
     assert back.count() == 2 * sample.count()
     # old files carry NULL for the new column, new files the value
     assert back.filter(F.col("quality_score").isNull()).count() == sample.count()
+    assert back.filter(F.col("record_seen")).count() == 0
 
 
 def test_zone_merge_schema_rejects_schemaless_formats(spark, tmp_path):
